@@ -75,26 +75,6 @@ def portable_hash64_py(s: str, salt: str = "") -> int:
     return int(hashlib.md5((salt + s).encode()).hexdigest()[:15], 16)
 
 
-# -- partition / bucket keys (engine-internal, murmur3 / xxhash) -------------
-
-
-def host_hash(host: Column | str, num_buckets: int) -> Column:
-    """Non-negative murmur3 bucket of host — the frontier partition key.
-
-    ``pmod(hash(h), P)`` is Spark's own HashPartitioning expression, so a
-    later ``repartition(P, host_bucket)`` co-locates rows with zero extra
-    shuffle logic; Spark hash() is murmur3_32 (north_rule).
-    """
-    return F.pmod(F.hash(_c(host)), F.lit(num_buckets))
-
-
-def salted_key(key: Column | str, salts: Column | str) -> Column:
-    """Compose a skew salt (0..salts-1, derived from xxhash of the row's
-    url) with a key — used to split hot hosts across partitions after
-    politeness budgeting (SURVEY.md §7.3.3)."""
-    return F.concat_ws("#", _c(key).cast("string"), _c(salts).cast("string"))
-
-
 def hamming64(a: Column | str, b: Column | str) -> Column:
     """Hamming distance between two 64-bit hashes (phash / simhash)."""
     return F.bit_count(_c(a).bitwiseXOR(_c(b)))

@@ -205,23 +205,6 @@ def resize_nn(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return img[ys[:, None], xs[None, :]]
 
 
-def sample_video_frames(data: bytes, every_n: int = 10) -> list[np.ndarray]:
-    """STUB — video decode. This container has no video codec libraries;
-    on a real cluster replace with pyav/ffmpeg frame extraction. The Spark
-    plumbing (binary column in, array-of-struct frames out via mapInPandas)
-    is real and tested with the deterministic fake below."""
-    raise NotImplementedError(
-        "video decode requires pyav/ffmpeg — not available in this container"
-    )
-
-
-def audio_features(data: bytes) -> dict:
-    """STUB — audio feature extraction (see sample_video_frames)."""
-    raise NotImplementedError(
-        "audio decode requires soundfile/librosa — not available in this container"
-    )
-
-
 def resize_images_udf(out_w: int, out_h: int):
     """mapInPandas-compatible pandas UDF: resize encoded images to
     (out_w, out_h), re-encode in the same fmt. Decode→transform→encode

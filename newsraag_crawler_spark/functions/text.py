@@ -69,11 +69,6 @@ def token_count_sql(e: str) -> str:
     return f"len(regexp_extract_all({e}, '{_TOKEN_RE}'))"
 
 
-def token_estimate(text: Column | str) -> Column:
-    """Reference's LLM token estimate: words * 1.5 (cleaner.py:85)."""
-    return (word_count(text) * 1.5).cast("double")
-
-
 # -- quality scoring ----------------------------------------------------------
 
 _STOPWORDS_EN = "\\b(the|and|of|to|in|a|is|for|on|that)\\b"

@@ -13,10 +13,10 @@ Reference semantics being generalized (SURVEY.md §2.4):
 Scale design for the seen set (north_rule): the frontier anti-joins a
 ``seen`` table — a shuffle on the dedup key at 10^10 rows. The Bloom path
 cuts that: per-shard Bloom bitsets (built once per wave, bytes per shard)
-broadcast to executors; probing is a broadcast join + vectorized bitset
-lookup, so only *possible* positives (tiny fraction) enter the exact
-anti-join shuffle. Bit positions are computed JVM-side (xxhash64 columns);
-Python only does numpy fancy indexing over Arrow batches.
+are joined to the probe rows on shard id and tested with JVM bit
+expressions (xxhash64 positions, element_at + getbit), so only *possible*
+positives (tiny fraction) enter the exact anti-join shuffle. Python runs
+only in the shard builds (numpy over Arrow batches), never in a probe.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     IntegerType,
     LongType,
     StructField,
@@ -73,12 +72,24 @@ _BLOOM_SCHEMA = StructType(
     ]
 )
 
-# JVM broadcast-probe cutoff: total bitset bytes (n_shards × n_bits/8) at or
-# under this probe via a broadcast join + per-row getbit — zero Python, zero
-# shuffle of the probe side. Bigger filters (e.g. 10^10-key seen sets at
-# ~10 bits/key ≈ 12.5 GB) exceed any sane broadcast and fall back to the
-# cogroup path, which ships each shard's bitset only to its own partition.
+# Probe join cutoff: total filter bytes at or under this broadcast the shard
+# rows to every probe task. Bigger filters (e.g. 10^10-key seen sets at ~10
+# bits/key ≈ 12.5 GB) exceed any sane broadcast and join on _shard_id
+# without the hint — a shuffled join, so each shard's words reach only the
+# partition that probes that shard. Either way the bit tests are the same
+# JVM expressions; the cutoff picks only the join strategy.
 _JVM_PROBE_MAX_BYTES = 256 << 20
+
+
+def _shard_of(key_col, n_shards: int):
+    """Shard routing, shared by builds and probes: murmur3(key) % n_shards."""
+    return F.pmod(F.hash(key_col), F.lit(n_shards)).cast("int")
+
+
+def _shard_dim(shards: DataFrame, cols: list[str], filter_bytes: int) -> DataFrame:
+    """The probe join's build side, keyed on _shard_id (see the cutoff)."""
+    dim = shards.select(F.col("shard_id").alias("_shard_id"), *cols)
+    return F.broadcast(dim) if filter_bytes <= _JVM_PROBE_MAX_BYTES else dim
 
 
 def bloom_params(n_keys_per_shard: int, fpp: float = 0.01) -> tuple[int, int]:
@@ -90,19 +101,20 @@ def bloom_params(n_keys_per_shard: int, fpp: float = 0.01) -> tuple[int, int]:
     return m, min(k, 8)
 
 
-def _positions(key_col, n_bits: int, n_hashes: int):
-    """k bit positions as a JVM-computed array column (double hashing:
-    pos_i = (h1 + i*h2) mod m, h1/h2 from two xxhash64 seeds)."""
+def _bloom_hashes(key_col, n_bits: int):
+    """The two base hashes of double hashing, each already reduced mod m."""
     # reduce mod m before combining: ANSI mode forbids the long overflow
     # h1 + i*h2 would hit; (h1m + i*h2m) < (n_hashes+1)*n_bits ≪ 2^63
-    h1 = F.pmod(F.xxhash64(key_col, F.lit(1)), F.lit(n_bits))
-    h2 = F.pmod(F.xxhash64(key_col, F.lit(2)), F.lit(n_bits))
-    return F.array(
-        *[
-            F.pmod(h1 + F.lit(i) * h2, F.lit(n_bits)).cast("long")
-            for i in range(n_hashes)
-        ]
+    return (
+        F.pmod(F.xxhash64(key_col, F.lit(1)), F.lit(n_bits)),
+        F.pmod(F.xxhash64(key_col, F.lit(2)), F.lit(n_bits)),
     )
+
+
+def _positions(h1, h2, n_bits: int, n_hashes: int) -> list:
+    """The k bit positions pos_i = (h1 + i*h2) mod m — the one definition
+    builds and probes share."""
+    return [F.pmod(h1 + F.lit(i) * h2, F.lit(n_bits)) for i in range(n_hashes)]
 
 
 def build_bloom_shards(
@@ -117,9 +129,9 @@ def build_bloom_shards(
     """Build per-shard Bloom bitsets from a key column.
 
     Returns (shard_id, n_bits, n_keys, words). Shard routing is
-    murmur3(key) % n_shards — the same expression probes use. Building is a
-    single groupBy-applyInPandas over (shard_id); the bitset never exceeds
-    n_bits/8 bytes per shard.
+    murmur3(key) % n_shards — the same expression probes use. Building is one
+    grouped pandas UDF over (shard_id); the bitset never exceeds n_bits/8
+    bytes per shard.
     """
     if n_bits is None or n_hashes is None:
         total = expected_keys or 1_000_000
@@ -127,8 +139,8 @@ def build_bloom_shards(
     nb, nh = n_bits, n_hashes
 
     prepped = keys.select(
-        F.pmod(F.hash(F.col(key)), F.lit(n_shards)).cast("int").alias("shard_id"),
-        _positions(F.col(key), nb, nh).alias("pos"),
+        _shard_of(F.col(key), n_shards).alias("shard_id"),
+        F.array(*_positions(*_bloom_hashes(F.col(key), nb), nb, nh)).alias("pos"),
     )
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -161,80 +173,58 @@ def probe_bloom(
     n_bits/n_hashes MUST match the build call (callers hold them — see
     storage.snapshot_store lineage, which records them per shard set).
 
-    Two physical strategies, same result:
-    - total bitset ≤ _JVM_PROBE_MAX_BYTES: broadcast-join the word arrays on
-      shard id and test bits with element_at + getbit — pure JVM expressions,
-      no Python boundary, no shuffle of the probe side (the build-side word
-      array is referenced in place by codegen, never copied per row).
-    - larger filters: cogroup per shard, so each bitset crosses the Arrow
-      boundary once per (shard × partition) group instead of being broadcast
-      everywhere; the probe is one vectorized gather per group.
+    The word arrays join on shard id (broadcast or shuffled, see
+    _JVM_PROBE_MAX_BYTES) and the bits are tested with element_at + getbit
+    — pure JVM expressions; the build-side word array is referenced in place
+    by codegen, never copied per row.
     """
     assert n_bits > 0 and n_hashes > 0, "pass the build-time n_bits/n_hashes"
     nb = n_bits
-    nh = n_hashes
-
-    if n_shards * (nb // 8) <= _JVM_PROBE_MAX_BYTES:
-        # UNROLLED bit tests (not forall over the _pos array): higher-order
-        # functions are CodegenFallback — the interpreted lambda measured
-        # 4x slower than the whole-stage-codegen'd static AND chain
-        probed = (
-            df.withColumn(
-                "_shard_id", F.pmod(F.hash(F.col(key)), F.lit(n_shards)).cast("int")
-            )
-            .withColumn("_h1", F.pmod(F.xxhash64(F.col(key), F.lit(1)), F.lit(nb)))
-            .withColumn("_h2", F.pmod(F.xxhash64(F.col(key), F.lit(2)), F.lit(nb)))
-        )
-        dim = F.broadcast(
-            shards.select(F.col("shard_id").alias("_shard_id"), F.col("words"))
-        )
-        hit = None
-        for i in range(nh):
-            pos = F.pmod(F.col("_h1") + F.lit(i) * F.col("_h2"), F.lit(nb))
-            t = (
-                F.getbit(
-                    F.element_at(F.col("words"), (pos / 64).cast("int") + 1),
-                    F.pmod(pos, F.lit(64)),
-                )
-                == 1
-            )
-            hit = t if hit is None else hit & t
-        result = probed.join(dim, "_shard_id", "left").withColumn(
-            "maybe_seen",
-            # missing shard row (no keys hashed there) → definitely unseen
-            F.when(F.col("words").isNull(), F.lit(False)).otherwise(hit),
-        )
-        return result.drop("_h1", "_h2", "_shard_id", "words")
-
-    probed = df.withColumn(
-        "_shard_id", F.pmod(F.hash(F.col(key)), F.lit(n_shards)).cast("int")
-    ).withColumn("_pos", _positions(F.col(key), nb, nh))
-
-    # do NOT .add() on probed.schema — pyspark caches and aliases that object
-    out_schema = StructType(
-        list(probed.schema.fields) + [StructField("maybe_seen", BooleanType())]
+    h1, h2 = _bloom_hashes(F.col(key), nb)
+    probed = (
+        df.withColumn("_shard_id", _shard_of(F.col(key), n_shards))
+        .withColumn("_h1", h1)
+        .withColumn("_h2", h2)
     )
-
-    def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=list(left.columns) + ["maybe_seen"])
-        if right.empty:
-            left = left.copy()
-            left["maybe_seen"] = False  # empty shard → definitely unseen
-            return left
-        words = np.asarray(right["words"].iloc[0], dtype=np.int64).view(np.uint64)
-        pos = np.stack(left["_pos"].values).astype(np.uint64)  # (n, k)
-        hit = (words[pos // np.uint64(64)] >> (pos % np.uint64(64))) & np.uint64(1)
-        left = left.copy()
-        left["maybe_seen"] = (hit != 0).all(axis=1)
-        return left
-
-    result = (
-        probed.groupBy("_shard_id")
-        .cogroup(shards.groupBy(F.col("shard_id").alias("_shard_id")))
-        .applyInPandas(_probe, out_schema)
+    # UNROLLED bit tests (not forall over a position array): higher-order
+    # functions are CodegenFallback — the interpreted lambda measured 4x
+    # slower than the whole-stage-codegen'd static AND chain
+    hit = None
+    for pos in _positions(F.col("_h1"), F.col("_h2"), nb, n_hashes):
+        t = (
+            F.getbit(
+                F.element_at(F.col("words"), (pos / 64).cast("int") + 1),
+                F.pmod(pos, F.lit(64)),
+            )
+            == 1
+        )
+        hit = t if hit is None else hit & t
+    dim = _shard_dim(shards, ["words"], n_shards * (nb // 8))
+    result = probed.join(dim, "_shard_id", "left").withColumn(
+        "maybe_seen",
+        # missing shard row (no keys hashed there) → definitely unseen
+        F.when(F.col("words").isNull(), F.lit(False)).otherwise(hit),
     )
-    return result.drop("_pos", "_shard_id")
+    return result.drop("_h1", "_h2", "_shard_id", "words")
+
+
+def _confirm_seen(
+    df: DataFrame, seen: DataFrame, probed: DataFrame, key: str
+) -> DataFrame:
+    """Rows of df whose key is not in seen, given ``probed`` = df's keys with
+    a no-false-negative ``maybe_seen`` flag (Bloom or cuckoo).
+
+    Shape (the §8 small-rows/big-rows split): only the key column flows
+    through the probe and the confirm joins — the full-width rows of df are
+    touched exactly once, by the final anti-join, which AQE turns into a
+    broadcast join whenever the confirmed-seen key set (≤ this wave's key
+    count, never the whole seen table) is small. Algebra:
+        fresh ∪ (maybe ⟕̸ seen)  ==  df ⟕̸ (seen ⋉ maybe_keys)
+    because a df row is dropped iff its key is filter-positive AND in seen.
+    """
+    maybe_keys = probed.filter(F.col("maybe_seen")).select(key)
+    confirmed_seen = seen.select(key).join(maybe_keys, key, "left_semi")
+    return df.join(confirmed_seen, key, "left_anti")
 
 
 def seen_filter_two_phase(
@@ -249,24 +239,12 @@ def seen_filter_two_phase(
     """EXACT seen filter with Bloom pre-filter (SURVEY.md §7.3.2).
 
     Bloom-negative rows are definitely new; only Bloom-positive KEYS (true
-    positives + FPR) are exact-confirmed against the seen table. Output =
-    rows of df definitely not in seen.
-
-    Shape (the §8 small-rows/big-rows split): only the key column flows
-    through the probe and the confirm joins — the full-width rows of df are
-    touched exactly once, by the final anti-join, which AQE turns into a
-    broadcast join whenever the confirmed-seen key set (≤ this wave's key
-    count, never the whole seen table) is small. Algebra:
-        fresh ∪ (maybe ⟕̸ seen)  ==  df ⟕̸ (seen ⋉ maybe_keys)
-    because a df row is dropped iff its key is Bloom-positive AND in seen.
+    positives + FPR) are exact-confirmed against the seen table (see
+    _confirm_seen for the join shape). Output = rows of df definitely not
+    in seen.
     """
-    maybe_keys = (
-        probe_bloom(df.select(key), shards, key, n_shards, n_bits, n_hashes)
-        .filter(F.col("maybe_seen"))
-        .select(key)
-    )
-    confirmed_seen = seen.select(key).join(maybe_keys, key, "left_semi")
-    return df.join(confirmed_seen, key, "left_anti")
+    probed = probe_bloom(df.select(key), shards, key, n_shards, n_bits, n_hashes)
+    return _confirm_seen(df, seen, probed, key)
 
 
 # ---------------------------------------------------------------------------
@@ -280,8 +258,8 @@ _CUCKOO_SCHEMA = StructType(
         StructField("n_buckets", LongType()),
         StructField("n_keys", LongType()),
         # one long per bucket: the 4 uint16 fingerprint slots packed
-        # little-endian (slot s = bits 16s..16s+15) — JVM probes test lanes
-        # with static shifts; numpy unpacks with a .view
+        # little-endian (slot s = bits 16s..16s+15) — the build packs them
+        # with a numpy .view; probes test lanes with static shifts
         StructField("table", ArrayType(LongType())),
         # exact spill list: (fp << 32) | b1 per overflowed key
         StructField("overflow", ArrayType(LongType())),
@@ -300,8 +278,7 @@ def _cuckoo_cols(key_col, n_buckets: int, n_shards: int):
         b1.bitwiseXOR(F.pmod(F.xxhash64(fp.cast("string")), F.lit(n_buckets))),
         F.lit(n_buckets),
     ).cast("long")
-    shard = F.pmod(F.hash(key_col), F.lit(n_shards)).cast("int")
-    return fp, b1, b2, shard
+    return fp, b1, b2, _shard_of(key_col, n_shards)
 
 
 def build_cuckoo_shards(
@@ -389,9 +366,8 @@ def probe_cuckoo(
     n_buckets: int = 1 << 14,
 ) -> DataFrame:
     """Add ``maybe_seen``: fingerprint present in either candidate bucket
-    (or the exact overflow list). Same two physical strategies as
-    probe_bloom: JVM broadcast join + static-shift lane tests for tables
-    that fit the broadcast budget, cogroup per shard beyond it."""
+    (or the exact overflow list). Same join as probe_bloom (broadcast or
+    shuffled on shard id) with static-shift lane tests."""
     fp, b1, b2, shard = _cuckoo_cols(F.col(key), n_buckets, n_shards)
     probed = (
         df.withColumn("_fp", fp)
@@ -400,70 +376,30 @@ def probe_cuckoo(
         .withColumn("_shard_id", shard)
     )
 
-    if n_shards * n_buckets * _CUCKOO_SLOTS * 2 <= _JVM_PROBE_MAX_BYTES:
-        def lane_hit(bucket_col):
-            w = F.element_at(F.col("table"), bucket_col.cast("int") + 1)
-            fpl = F.col("_fp").cast("bigint")
-            return (
-                (F.shiftrightunsigned(w, 0).bitwiseAND(F.lit(0xFFFF)) == fpl)
-                | (F.shiftrightunsigned(w, 16).bitwiseAND(F.lit(0xFFFF)) == fpl)
-                | (F.shiftrightunsigned(w, 32).bitwiseAND(F.lit(0xFFFF)) == fpl)
-                | (F.shiftrightunsigned(w, 48).bitwiseAND(F.lit(0xFFFF)) == fpl)
-            )
+    def lane_hit(bucket_col):
+        w = F.element_at(F.col("table"), bucket_col.cast("int") + 1)
+        fpl = F.col("_fp").cast("bigint")
+        return (
+            (F.shiftrightunsigned(w, 0).bitwiseAND(F.lit(0xFFFF)) == fpl)
+            | (F.shiftrightunsigned(w, 16).bitwiseAND(F.lit(0xFFFF)) == fpl)
+            | (F.shiftrightunsigned(w, 32).bitwiseAND(F.lit(0xFFFF)) == fpl)
+            | (F.shiftrightunsigned(w, 48).bitwiseAND(F.lit(0xFFFF)) == fpl)
+        )
 
-        ovf_hit = F.array_contains(
-            F.col("overflow"),
-            F.shiftleft(F.col("_fp").cast("bigint"), 32) + F.col("_b1"),
-        )
-        dim = F.broadcast(
-            shards.select(
-                F.col("shard_id").alias("_shard_id"), F.col("table"), F.col("overflow")
-            )
-        )
-        result = probed.join(dim, "_shard_id", "left").withColumn(
-            "maybe_seen",
-            F.when(F.col("table").isNull(), F.lit(False)).otherwise(
-                lane_hit(F.col("_b1")) | lane_hit(F.col("_b2")) | ovf_hit
-            ),
-        )
-        return result.drop("_fp", "_b1", "_b2", "_shard_id", "table", "overflow")
-
-    out_schema = StructType(
-        list(probed.schema.fields) + [StructField("maybe_seen", BooleanType())]
+    ovf_hit = F.array_contains(
+        F.col("overflow"),
+        F.shiftleft(F.col("_fp").cast("bigint"), 32) + F.col("_b1"),
     )
-
-    def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=list(left.columns) + ["maybe_seen"])
-        left = left.copy()
-        if right.empty:
-            left["maybe_seen"] = False
-            return left
-        table = (
-            np.asarray(right["table"].iloc[0], dtype=np.int64)
-            .view(np.uint16)
-            .reshape(n_buckets, _CUCKOO_SLOTS)
-        )
-        ovf_set = {int(v) for v in right["overflow"].iloc[0]}
-        fps = left["_fp"].to_numpy()
-        b1s = left["_b1"].to_numpy()
-        b2s = left["_b2"].to_numpy()
-        hit = (table[b1s] == fps[:, None]).any(axis=1) | (
-            table[b2s] == fps[:, None]
-        ).any(axis=1)
-        if ovf_set:
-            for i in np.where(~hit)[0]:
-                if (int(fps[i]) << 32) | int(b1s[i]) in ovf_set:
-                    hit[i] = True
-        left["maybe_seen"] = hit
-        return left
-
-    result = (
-        probed.groupBy("_shard_id")
-        .cogroup(shards.groupBy(F.col("shard_id").alias("_shard_id")))
-        .applyInPandas(_probe, out_schema)
+    dim = _shard_dim(
+        shards, ["table", "overflow"], n_shards * n_buckets * _CUCKOO_SLOTS * 2
     )
-    return result.drop("_fp", "_b1", "_b2", "_shard_id")
+    result = probed.join(dim, "_shard_id", "left").withColumn(
+        "maybe_seen",
+        F.when(F.col("table").isNull(), F.lit(False)).otherwise(
+            lane_hit(F.col("_b1")) | lane_hit(F.col("_b2")) | ovf_hit
+        ),
+    )
+    return result.drop("_fp", "_b1", "_b2", "_shard_id", "table", "overflow")
 
 
 # ---------------------------------------------------------------------------
@@ -521,48 +457,6 @@ def minhash_signature(
         )
 
     return F.aggregate(hs, init, step)
-
-
-def lsh_band_pairs(
-    df: DataFrame,
-    id_col: str,
-    sig_col: str = "sig",
-    bands: int = 4,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Candidate near-dup pairs: ids sharing ≥1 LSH band bucket.
-
-    band hash = xxhash64 over the band's slice of the signature; the
-    band-bucket join is the shuffle — candidates only, never all pairs.
-    Returns distinct (id_a, id_b) with id_a < id_b.
-    """
-    banded = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at(F.col(sig_col), b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    left = banded.select("band", "bucket", F.col("_id").alias("id_a"))
-    right = banded.select("band", "bucket", F.col("_id").alias("id_b"))
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 def ngram_jaccard_pairs(

@@ -78,16 +78,6 @@ def status_pivot(df: DataFrame, group_col: str, status_col: str, statuses: list[
     return df.groupBy(group_col).pivot(status_col, statuses).count().na.fill(0)
 
 
-def daily_rollup(df: DataFrame, ts_col: str, value_col: str, keys: list[str]) -> DataFrame:
-    """Tumbling 1-day window sum — the reference's manual day-boundary reset
-    (token_tracker.py:43-55) IS a tumbling window (A5)."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), "1 day").alias("day"), *keys)
-        .agg(F.sum(value_col).alias("total"))
-        .select(F.col("day.start").alias("day"), *keys, "total")
-    )
-
-
 def host_health(fetch_log: DataFrame, failure_threshold: int = 3) -> DataFrame:
     """Per-host health (A7: source_models.py:97-115): consecutive trailing
     failures >= threshold ⇒ unhealthy. Consecutive-from-the-end = count of
@@ -184,16 +174,6 @@ def token_budget_gate(
         "allowed",
         (F.col("cum_day_before") + F.col(tokens_col) <= F.lit(daily_limit))
         & (F.col("cum_month_before") + F.col(tokens_col) <= F.lit(monthly_limit)),
-    )
-
-
-def monthly_rollup(df: DataFrame, ts_col: str, value_col: str, keys: list[str]) -> DataFrame:
-    """Monthly tumbling-window sum — the reference's month-boundary counter
-    reset (token_tracker.py:50-55) as a window aggregation (A5)."""
-    return (
-        df.groupBy(F.date_trunc("month", F.col(ts_col)).alias("month"), *keys)
-        .agg(F.sum(value_col).alias("total"))
-        .select("month", *keys, "total")
     )
 
 

@@ -12,7 +12,9 @@ Two drivers:
   (operators.frontier.reference_schedule) + fetch + snapshot commits. The
   parity surface for the oracle tests.
 - ``run_scale_wave``        — the production path: per-host politeness,
-  Bloom-backed seen filter, skew salting. No global order.
+  exact anti-join against the whole ``seen`` table, skew salting. No
+  global order. (The Bloom two-phase filter, ``dedup.seen_filter_two_phase``,
+  is used by the bench and the catalog, not here.)
 
 The fetch derives all metadata columns JVM-side and runs only the pixel
 codec in an Arrow-batched pandas UDF (bit-compatible with the oracle kernel

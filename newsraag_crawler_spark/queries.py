@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .functions import text as T
 from .functions import urlnorm as U
-from .functions.hashing import hamming64, portable_hash64, portable_hash64_sql
+from .functions.hashing import portable_hash64, portable_hash64_sql
 
 # ---------------------------------------------------------------------------
 # synthesized crawl inputs (shared Spark/DuckDB expressions)
@@ -72,6 +72,18 @@ def _cloned_docs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(clones).repartition(
         spark.sparkContext.defaultParallelism, F.col("doc_id")
     )
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over ``defaultParallelism`` partitions.
+
+    The queries that call this do map-side work (regex chains, per-token
+    hashing, argmin/argmax projections) before their first exchange, so scan
+    parallelism is their only parallelism: the local testdata is one small
+    parquet file = one input split, and unspread all that work ran on one
+    task.
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 _CLONED_DOCS_DUCK = (
@@ -142,67 +154,6 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-shaped analytics: revenue per order for a customer segment,
-    top-10 deterministic. Broadcast the dimension side."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    rev = (
-        li.groupBy("l_orderkey")
-        .agg(
-            F.round(F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))), 2)
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-    j = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey).join(
-        rev, orders.o_orderkey == rev.l_orderkey
-    )
-    return (
-        j.select(F.col("o_orderkey").alias("orderkey"), "revenue")
-        .orderBy(F.col("revenue").desc(), F.col("orderkey"))
-        .limit(10)
-    )
-
-
-_SQL_TOP_REVENUE = """
-WITH rev AS (
-  SELECT l_orderkey,
-         round(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))), 2)::DOUBLE AS revenue
-  FROM lineitem GROUP BY l_orderkey)
-SELECT o.o_orderkey AS orderkey, rev.revenue
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN rev ON o.o_orderkey = rev.l_orderkey
-ORDER BY rev.revenue DESC, orderkey LIMIT 10
-"""
-
-
-def q_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy(
-            F.date_trunc("day", F.col("ts")).alias("day"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 3)
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-
-
-_SQL_EVENTS_DAILY = """
-SELECT date_trunc('day', ts) AS day, event_type,
-       count(*) AS n_events,
-       round(sum(CAST(value AS DECIMAL(18,6))), 3)::DOUBLE AS total_value
-FROM events GROUP BY 1, 2
 """
 
 
@@ -593,12 +544,7 @@ GROUP BY 1, 2 HAVING count(*) >= {_WINNOW_MIN_SHARED}
 
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round-robin split of the single local parquet file (same note as
-    # q_ivf_ann): the quality/lang-ID regex work is pure map-side, so scan
-    # parallelism is the ONLY parallelism — unsplit, the whole table's
-    # regex chain ran on one task (a real 100 TB scan has one split per
-    # file chunk and never needs this)
-    d = _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
+    d = _spread(_docs(spark, sf_dir))
     return d.select(
         "doc_id",
         T.word_count("text").alias("n_words"),
@@ -835,7 +781,7 @@ def q_bloom_seen_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy vs 1.0 s checkpointed; a round-robin spread instead measured
     # WORSE — the extra exchange costs more than the parallelism gains)
     d = _docs_with_url(spark, sf_dir).withColumn("key", U.surt_url("url"))
-    d = d.localCheckpoint(eager=True)
+    d = d.select("doc_id", "key").localCheckpoint(eager=True)
     seen = d.filter(F.pmod("doc_id", F.lit(3)) == 0).select("key")
     shards = build_bloom_shards(seen, n_shards=16, n_bits=1 << 16, n_hashes=5)
     fresh = seen_filter_two_phase(
@@ -859,24 +805,17 @@ def q_cuckoo_seen_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bloom): cuckoo-negative rows are definitely fresh (no-false-negatives is
     pytest-gated), cuckoo-positive rows are exact-confirmed — the result
     MUST equal the plain exact anti-join, which is the oracle."""
-    from .operators.dedup import build_cuckoo_shards, probe_cuckoo
+    from .operators.dedup import _confirm_seen, build_cuckoo_shards, probe_cuckoo
 
     # keyed frontier checkpointed once — same rationale/measurement as
     # q_bloom_seen_filter (four consumers of the SURT chain)
     d = _docs_with_url(spark, sf_dir).withColumn("key", U.surt_url("url"))
-    d = d.localCheckpoint(eager=True)
+    d = d.select("doc_id", "key").localCheckpoint(eager=True)
     seen = d.filter(F.pmod("doc_id", F.lit(3)) == 0).select("key")
     shards = build_cuckoo_shards(seen, n_shards=16, n_buckets=1 << 12)
-    # same algebra as seen_filter_two_phase: a row is dropped iff its key is
-    # cuckoo-positive AND exact-confirmed in seen — only KEYS flow through
-    # the probe/confirm joins, full rows are touched once by the anti-join
-    maybe_keys = (
-        probe_cuckoo(d.select("key"), shards, n_shards=16, n_buckets=1 << 12)
-        .filter(F.col("maybe_seen"))
-        .select("key")
-    )
-    confirmed_seen = seen.join(maybe_keys, "key", "left_semi")
-    return d.join(confirmed_seen, "key", "left_anti").select("doc_id", "key")
+    # same two-phase algebra as seen_filter_two_phase
+    probed = probe_cuckoo(d.select("key"), shards, n_shards=16, n_buckets=1 << 12)
+    return _confirm_seen(d, seen, probed, "key").select("doc_id", "key")
 
 
 def _sql_cuckoo_seen() -> str:
@@ -961,14 +900,10 @@ def q_fuzzy_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback (rss_template.py:186-264)."""
     from .functions.extract import fuzzy_published_ts
 
-    # project to the two needed columns BEFORE the round-robin spread of the
-    # single local parquet split (guide §2.3: project before the exchange;
-    # §2.4 note — the regex chain is map-side, so scan parallelism is the
-    # only parallelism, and the local file is one split)
+    # project to the two needed columns BEFORE the spread (guide §2.3:
+    # project before the exchange)
     ev = _fuzzy_raw_cols(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "ts")
-        .repartition(spark.sparkContext.defaultParallelism)
+        _spread(spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "ts"))
     )
     ts, pat = fuzzy_published_ts("raw_text", "title")
     return ev.select(
@@ -1746,14 +1681,7 @@ def q_rss_items(spark: SparkSession, sf_dir: str, max_items: int = 2) -> DataFra
     `rss_template.py:140-152`) coalesced AHEAD of the C7 fuzzy chain."""
     from .functions.extract import fuzzy_published_ts, structured_ts, xml_repair
 
-    # spread the single local parquet split before synthesizing feed bodies:
-    # the whole parse (repair + item explode + per-item regex/date chain) is
-    # map-side, so unsplit it all ran on one task (see q_ivf_ann note)
-    d = _synth_multifeed_xml(
-        _docs(spark, sf_dir)
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    d = _synth_multifeed_xml(_spread(_docs(spark, sf_dir).select("doc_id")))
     src = F.when(
         F.col("raw").rlike(_NEEDS_REPAIR), xml_repair("raw")
     ).otherwise(F.col("raw"))
@@ -1836,12 +1764,7 @@ def q_robust_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     error string."""
     from .functions.extract import xml_repair
 
-    # same single-split spread as q_rss_items (map-side regex family)
-    d = _synth_multifeed_xml(
-        _docs(spark, sf_dir)
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    d = _synth_multifeed_xml(_spread(_docs(spark, sf_dir).select("doc_id")))
     looks_rss = F.col("raw").rlike(_RSS_SHAPE)
     needs_repair = F.col("raw").rlike(_NEEDS_REPAIR)
     looks_html = F.col("raw").rlike("(?i)<html")
@@ -2317,16 +2240,8 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation) — portable md5 hashing so DuckDB reproduces every bit."""
     from .operators.dedup import simhash_relational
 
-    # spread the single local parquet split: tokenize + explode + per-token
-    # md5 + the partial bit votes all run BEFORE the one hash exchange, so
-    # unsplit they ran on one task (see q_ivf_ann note)
-    d = (
-        _docs(spark, sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "doc_id", F.split(T.clean_whitespace(F.lower("text")), " ").alias("tokens")
-        )
+    d = _spread(_docs(spark, sf_dir).select("doc_id", "text")).select(
+        "doc_id", F.split(T.clean_whitespace(F.lower("text")), " ").alias("tokens")
     )
     return simhash_relational(d, "doc_id", "tokens", portable=True)
 
@@ -2390,14 +2305,8 @@ def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine inside probed cells — fully relational and oracle-mirrored."""
     from .operators.similarity import ivf_topk
 
-    # round-robin split of the single local parquet file: the assignment is
-    # now a pure map-side argmax (no exchanges of its own), so scan
-    # parallelism is the ONLY parallelism — a real multi-file/100TB table
-    # gets this from its input splits for free
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("embedding", F.transform("embedding", lambda x: x.cast("double")))
+    emb = _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).withColumn(
+        "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -2445,12 +2354,7 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivf_topk
 
     raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # round-robin split of the single local parquet file (same note as
-    # q_ivf_ann): the Lloyd argmin is map-side, so scan parallelism is the
-    # ONLY parallelism — unsplit, every training job ran as one task
-    train = raw.repartition(spark.sparkContext.defaultParallelism).select(
-        "vec_id", quantize_vec("embedding").alias("qvec")
-    )
+    train = _spread(raw).select("vec_id", quantize_vec("embedding").alias("qvec"))
     # checkpoint=True: one-shot query-layer call — ivf_topk broadcasts the
     # codebook into BOTH its corpus-assignment and query-routing joins, and
     # lazily each broadcast re-runs the whole Lloyd chain (steady 5.8 s →
@@ -2461,7 +2365,7 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cid").alias("cell"),
         F.transform("svec", lambda s: s.cast("double")).alias("cvec"),
     )
-    emb = raw.repartition(spark.sparkContext.defaultParallelism).withColumn(
+    emb = _spread(raw).withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     queries = emb.filter(F.col("vec_id") < 5).select(
@@ -2512,12 +2416,8 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exemption is deliberately not used."""
     from .operators.clustering import kmeans_assign, quantize_vec
 
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        # spread the single local file split — the map-side argmin's only
-        # parallelism is scan parallelism (see q_ivf_ann)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", quantize_vec("embedding").alias("qvec"))
+    emb = _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
+        "vec_id", quantize_vec("embedding").alias("qvec")
     )
     # checkpoint=True: one-shot query-layer call (same opt-in rule as
     # dedup_ngram_jaccard) — materializes each iteration's k-row centroids
@@ -2592,14 +2492,8 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice("embedding", 2, _EMB_DIM - 1),
         ).alias("embedding"),
     )
-    corpus = (
-        emb.unionByName(clones)
-        # spread the single local parquet split: the bucket fold is map-side,
-        # so scan parallelism is the only parallelism (see q_ivf_ann)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn(
-            "bucket", srp_bucket_portable(F.col("embedding"), _EMB_DIM, _SRP_BITS)
-        )
+    corpus = _spread(emb.unionByName(clones)).withColumn(
+        "bucket", srp_bucket_portable(F.col("embedding"), _EMB_DIM, _SRP_BITS)
     )
     # deliberately NOT checkpointed: with the scan spread, re-running the
     # bucket fold on the second self-join side costs less than the extra

@@ -49,23 +49,17 @@ def build_session(
         # sets (confirmed-seen keys, skew censuses) are tens of MB and are
         # far cheaper broadcast than shuffled against a frontier. Size-
         # checked by Catalyst/AQE per join, so an over-estimate degrades to
-        # a shuffle, never an OOM. Parameterised for deployments.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"),
-        )
+        # a shuffle, never an OOM. Deployments override it via extra_conf.
+        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # the bypass-merge shuffle writer opens reduce-count files PER MAP
         # TASK when reduce partitions <= 200 — with the 64-partition default
         # every shuffle paid M×R file creations (measured: a 3 MB 128-part
         # exchange took 1.0 s vs 0.13 s on the sort path on this box's FS).
         # The sort-based writer (one file + index per map task) is also the
         # shape that survives many-map-task clusters (guide §2.2's M×R
-        # small-file blowup). Parameterised for deployments with file
-        # systems where tiny-file churn is free.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "8"),
-        )
+        # small-file blowup). Deployments on file systems where tiny-file
+        # churn is free override it via extra_conf.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # image `bytes` columns: cap rows per Arrow batch so a batch of

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 TPCH_TABLES = (
     "region",
     "nation",
@@ -17,11 +15,3 @@ TPCH_TABLES = (
     "embeddings",
 )
 
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TPCH_TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

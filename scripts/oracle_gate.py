@@ -4,7 +4,10 @@ Replicates the external driver's comparison (every ``queries()`` entry vs
 its ``oracle_sql()`` DuckDB mirror: row count, column names, dtype kinds,
 exact values) against an arbitrary testdata dir:
 
-    python scripts/oracle_gate.py /root/testdata/sf0.1
+    SPARK_GRAFT_CPUS=4 python scripts/oracle_gate.py <testdata dir, e.g. sf0.1>
+
+The session is the one the package ships (``session.build_session``, cores
+from $SPARK_GRAFT_CPUS), so the gate checks the shipped configuration.
 
 The driver gates sf0.01; running this at sf0.1 is the 10x-scale
 regression net that caught the round(double, n) cross-engine boundary
@@ -25,18 +28,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import duckdb
     import pandas as pd
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from newsraag_crawler_spark.session import build_session
     from newsraag_crawler_spark.sources.tables import TPCH_TABLES
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "12g")
-        .getOrCreate()
-    )
+    spark = build_session("oracle_gate")
     con = duckdb.connect()
     for t in TPCH_TABLES:
         con.execute(

@@ -1,5 +1,5 @@
 """Dedup operators: Bloom exactness/no-false-negatives, two-phase equality
-with the exact anti-join, MinHash-LSH recall on clones, phash bands."""
+with the exact anti-join, MinHash signatures of clones, phash bands."""
 
 from __future__ import annotations
 
@@ -63,10 +63,10 @@ def test_minhash_lsh_finds_exact_clones(spark):
         "doc_id",
         dedup.minhash_signature(shingles("text", 3), 16).alias("sig"),
     )
-    pairs = dedup.lsh_band_pairs(sig, "doc_id", bands=4, rows_per_band=4)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    got = {r.doc_id: list(r.sig) for r in sig.collect()}
     for i in range(5):
-        assert (i, 100 + i) in got
+        assert got[100 + i] == got[i]  # a clone shares every band
+    assert got[5] != got[6]
 
 
 def test_phash_bucket_pairs_finds_small_hamming(spark):
@@ -206,21 +206,30 @@ def test_winnowing_short_doc_fallback(spark):
 
 
 def test_probe_paths_agree(spark, monkeypatch):
-    """The JVM broadcast probe and the cogroup fallback are two physical
-    strategies for the same result: force the fallback by zeroing the
-    broadcast budget and compare row-for-row on keys with hits, misses and
-    false-positive candidates."""
+    """The broadcast and the shuffled probe join are two physical
+    strategies for the same result: force the shuffled join by zeroing the
+    broadcast budget (and the session's auto-broadcast, so the planner
+    cannot pick a broadcast from the tiny shard stats), then compare
+    row-for-row on keys with hits, misses and false-positive candidates."""
     seen = _keys(spark, 400, "pp")
     mixed = _keys(spark, 300, "pp").union(_keys(spark, 300, "ppnew"))
     bshards = dedup.build_bloom_shards(seen, n_shards=NS, n_bits=NB, n_hashes=NH)
     cshards = dedup.build_cuckoo_shards(seen, n_shards=NS, n_buckets=1 << 10)
-    jvm_b = dedup.probe_bloom(mixed, bshards, n_shards=NS, n_bits=NB, n_hashes=NH)
-    jvm_c = dedup.probe_cuckoo(mixed, cshards, n_shards=NS, n_buckets=1 << 10)
+    bc_b = dedup.probe_bloom(mixed, bshards, n_shards=NS, n_bits=NB, n_hashes=NH)
+    bc_c = dedup.probe_cuckoo(mixed, cshards, n_shards=NS, n_buckets=1 << 10)
     monkeypatch.setattr(dedup, "_JVM_PROBE_MAX_BYTES", 0)
-    cg_b = dedup.probe_bloom(mixed, bshards, n_shards=NS, n_bits=NB, n_hashes=NH)
-    cg_c = dedup.probe_cuckoo(mixed, cshards, n_shards=NS, n_buckets=1 << 10)
-    for jvm, cg in ((jvm_b, cg_b), (jvm_c, cg_c)):
-        assert jvm.exceptAll(cg).isEmpty() and cg.exceptAll(jvm).isEmpty()
+    sh_b = dedup.probe_bloom(mixed, bshards, n_shards=NS, n_bits=NB, n_hashes=NH)
+    sh_c = dedup.probe_cuckoo(mixed, cshards, n_shards=NS, n_buckets=1 << 10)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for bc, sh in ((bc_b, sh_b), (bc_c, sh_c)):
+            plan = sh._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
+            assert bc.exceptAll(sh).isEmpty() and sh.exceptAll(bc).isEmpty()
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_two_step_shingles_equal_one_expression(spark):

@@ -81,16 +81,6 @@ def test_resize_images_udf(spark):
         assert dec.shape == (16, 16, 3)
 
 
-def test_video_audio_stubs_raise():
-    import pytest as _pytest
-    from newsraag_crawler_spark.functions.images import audio_features, sample_video_frames
-
-    with _pytest.raises(NotImplementedError):
-        sample_video_frames(b"xx")
-    with _pytest.raises(NotImplementedError):
-        audio_features(b"xx")
-
-
 def test_image_stats_query_matches_python_golden(spark):
     """Golden-row oracle for the rows-only driver query `image_stats`: every
     Spark-produced row must equal the pure-Python fetch_payload_py + decode

@@ -45,9 +45,11 @@ def test_canonicalizer_whole_stage_codegen(spark):
 
 
 def test_dimension_join_is_broadcast(spark):
-    from newsraag_crawler_spark.queries import q_top_revenue_orders
+    """The scale wave joins its small per-host policy dimension
+    (budget_waves) as a broadcast, never a shuffle of the frontier."""
+    from newsraag_crawler_spark.queries import q_crawl_wave_scale
 
-    p = _plan(q_top_revenue_orders(spark, SF))
+    p = _plan(q_crawl_wave_scale(spark, SF))
     assert "BroadcastHashJoin" in p, p
 
 
@@ -222,3 +224,54 @@ def test_crawl_embedding_neardup_plan(spark):
     assert p.count("MapInPandas") == 0, p  # fetch ran once, at checkpoint time
     assert "CartesianProduct" not in p, p
     assert "BroadcastHashJoin" in p or "SortMergeJoin" in p, p
+
+
+def test_spread_plans_round_robin(spark):
+    """queries._spread puts one round-robin exchange over the single-split
+    local parquet scan, so the map-side work after it runs on every core."""
+    from newsraag_crawler_spark.queries import _spread
+
+    one_split = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
+    p = _plan(_spread(one_split), "simple")
+    assert p.count("RoundRobinPartitioning") == 1, p
+    assert f"RoundRobinPartitioning({spark.sparkContext.defaultParallelism})" in p, p
+
+
+def test_seen_filter_checkpoints_are_two_columns(spark):
+    """The eagerly checkpointed keyed frontier in the Bloom and cuckoo seen
+    filters holds only (doc_id, key) — the columns both queries output."""
+    from newsraag_crawler_spark.queries import (
+        q_bloom_seen_filter,
+        q_cuckoo_seen_filter,
+    )
+
+    for q in (q_bloom_seen_filter, q_cuckoo_seen_filter):
+        p = _plan(q(spark, SF))
+        scans = p.split("Scan ExistingRDD\nOutput ")[1:]
+        assert scans, (q, p)
+        for sc in scans:
+            assert sc.startswith("[2]: [doc_id#"), (q, sc[:200])
+
+
+def test_probe_plans_have_no_python_at_any_size(spark, monkeypatch):
+    """Above the broadcast cutoff the Bloom and cuckoo probes stay JVM bit
+    tests over a shuffled join on shard id: no pandas cogroup and no Arrow
+    eval in the plan (the shard builds are grouped pandas UDFs, which is
+    FlatMapGroupsInPandas)."""
+    from newsraag_crawler_spark.operators import dedup
+
+    keys = spark.range(200).select(F.col("id").cast("string").alias("key"))
+    monkeypatch.setattr(dedup, "_JVM_PROBE_MAX_BYTES", 0)
+    probes = (
+        dedup.probe_bloom(
+            keys, dedup.build_bloom_shards(keys, n_shards=4, n_bits=1 << 10, n_hashes=3),
+            n_shards=4, n_bits=1 << 10, n_hashes=3,
+        ),
+        dedup.probe_cuckoo(
+            keys, dedup.build_cuckoo_shards(keys, n_shards=4, n_buckets=1 << 8),
+            n_shards=4, n_buckets=1 << 8,
+        ),
+    )
+    for df in probes:
+        p = _plan(df)
+        assert "FlatMapCoGroupsInPandas" not in p and "ArrowEvalPython" not in p, p
