@@ -419,21 +419,14 @@ def minhash_perms(n: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(
-    shingle_col, num_hashes: int = 16, portable: bool = False
-) -> object:
+def minhash_signature(shingle_col, num_hashes: int = 16) -> object:
     """MinHash signature as array<bigint> over a shingle array column.
 
-    Each shingle is hashed ONCE (md5-portable or xxhash64), then the k
-    permutations are cheap affine maps mod p — k× fewer strong hashes, and
-    DuckDB reproduces the portable variant exactly.
+    Each shingle is hashed ONCE (the md5-derived ``hashing.portable_hash64``),
+    then the k permutations are cheap affine maps mod p — k× fewer strong
+    hashes, and DuckDB reproduces every signature exactly.
     """
-    if portable:
-        def base(s):
-            return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    else:
-        def base(s):
-            return F.xxhash64(s)
+    from ..functions.hashing import portable_hash64
 
     # Two steps so the strong hash runs ONCE per shingle: (1) transform
     # shingles → base hashes (the only md5 site, referenced exactly once);
@@ -442,7 +435,7 @@ def minhash_signature(
     # expressions — or an expression over the lambda var used k times —
     # get duplicated by Catalyst → k× md5 recomputation).
     perms = minhash_perms(num_hashes)
-    hs = F.transform(shingle_col, lambda s: F.pmod(base(s), F.lit(_MINHASH_P)))
+    hs = F.transform(shingle_col, lambda s: F.pmod(portable_hash64(s), F.lit(_MINHASH_P)))
     init = F.array(*[F.lit(_MINHASH_P).cast("long")] * num_hashes)
 
     def step(acc, h):
@@ -626,9 +619,7 @@ def winnowing_pairs(
 SIMHASH_BITS = 60  # width of the portable md5-derived hash (hashing.portable_hash64)
 
 
-def simhash_relational(
-    df: DataFrame, id_col: str, token_col: str = "tokens", portable: bool = True
-) -> DataFrame:
+def simhash_relational(df: DataFrame, id_col: str, token_col: str = "tokens") -> DataFrame:
     """60-bit SimHash computed FULLY relationally — zero Python in the hot
     path (replaces a per-token hashlib loop, a scale-killer at 100 TB):
 
@@ -638,16 +629,13 @@ def simhash_relational(
         partial-aggregating sums (map-side combine; one shuffle on id_col) →
         recompose the fingerprint.
 
-    portable=True hashes with md5 (bit-reproducible in DuckDB/Python for the
-    oracle gate); portable=False uses xxhash64 folded to 60 bits (faster,
-    production path). Returns (id_col, simhash: bigint >= 0).
+    Tokens hash with the md5-derived ``hashing.portable_hash64``, so the
+    fingerprint is bit-reproducible in DuckDB (``simhash_relational_sql``)
+    and Python for the oracle gate. Returns (id_col, simhash: bigint >= 0).
     """
     from ..functions.hashing import portable_hash64
 
-    if portable:
-        h = portable_hash64(F.col("_tok"))
-    else:
-        h = F.pmod(F.xxhash64(F.col("_tok")), F.lit(1 << SIMHASH_BITS))
+    h = portable_hash64(F.col("_tok"))
     hashed = df.select(
         F.col(id_col), F.explode_outer(F.col(token_col)).alias("_tok")
     ).select(F.col(id_col), h.alias("_h"))
@@ -675,7 +663,8 @@ def simhash_relational(
 
 
 def simhash_relational_sql(corpus_sql: str, id_col: str, token_expr: str) -> str:
-    """DuckDB mirror of ``simhash_relational(portable=True)``."""
+    """DuckDB mirror of ``simhash_relational``: the same md5-derived token
+    hash, per-bit ±1 votes and fingerprint recomposition."""
     from ..functions.hashing import portable_hash64_sql
 
     h = portable_hash64_sql("tok")

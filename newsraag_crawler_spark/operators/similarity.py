@@ -8,20 +8,21 @@ Here it becomes first-class:
   set against the corpus, dot/norm with built-in higher-order functions
   (F.zip_with / F.aggregate — JVM-side, no Python), per-query window top-k.
   The baseline and the verifier for the approximate path.
-- ``srp_bucket``      — signed-random-projection LSH bucket (deterministic
-  planes from a seed) via one vectorized numpy UDF; equal buckets are ANN
-  candidates. The scale path: bucket join instead of full cross product.
+- ``srp_bucket``      — signed-random-projection LSH bucket: integer plane
+  coefficients fixed at plan time, projected by built-in higher-order
+  functions (JVM-side, no Python, no Arrow crossing). ``srp_bucket_sql`` is
+  its DuckDB mirror, so the bucket assignment is oracle-checkable. Equal
+  buckets are ANN candidates. The scale path: bucket join instead of full
+  cross product.
 - ``srp_topk``        — bucket-join candidates → exact cosine → top-k, with
   multi-probe (0/1-bit flips) to trade recall for fan-out.
+- ``ivf_topk``        — the same shape over a coarse quantizer's cells.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 
 
 def _dot(a, b):
@@ -85,28 +86,6 @@ def cosine_topk(
     )
 
 
-def srp_bucket(vec_col, n_bits: int = 16, dim: int = 32, seed: int = 42):
-    """Signed-random-projection bucket id (int) for a vector column.
-
-    Hyperplanes are a deterministic RNG(seed) matrix materialized once per
-    executor (module-level cache inside the UDF); the projection is one
-    numpy matmul per Arrow batch.
-    """
-
-    @F.pandas_udf(IntegerType())
-    def _bucket(vecs: pd.Series) -> pd.Series:
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((dim, n_bits))
-        out = np.zeros(len(vecs), dtype=np.int32)
-        if len(vecs):
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            signs = (mat @ planes) > 0
-            out = signs.dot(1 << np.arange(n_bits)).astype(np.int32)
-        return pd.Series(out)
-
-    return _bucket(vec_col)
-
-
 def srp_coeffs(dim: int, n_bits: int) -> list[list[int]]:
     """Deterministic PORTABLE hyperplane coefficients: integer in
     [-1000, 1000] derived from md5 of "srp:i:j" at PLAN TIME (plain Python).
@@ -121,7 +100,19 @@ def srp_coeffs(dim: int, n_bits: int) -> list[list[int]]:
     ]
 
 
-def srp_bucket_portable(vec_col, dim: int, n_bits: int):
+def _literal_coeffs(dim: int, n_bits: int) -> list[list[int]]:
+    """``srp_coeffs``, checked before they are formatted into SQL text: an
+    integer in [-1000, 1000] prints as an exact ``float()`` literal, while a
+    non-integral or non-finite value could print in a form that parses to a
+    different number (or not at all)."""
+    c = srp_coeffs(dim, n_bits)
+    assert all(
+        isinstance(x, int) and -1000 <= x <= 1000 for row in c for x in row
+    ), "srp_coeffs must be integers in [-1000, 1000]"
+    return c
+
+
+def srp_bucket(vec_col, dim: int, n_bits: int):
     """SRP bucket as a pure column expression over literal coefficients.
 
     Each dot_j is a zip_with(vec, coeff_literals, *) followed by a LEFT-FOLD
@@ -132,7 +123,7 @@ def srp_bucket_portable(vec_col, dim: int, n_bits: int):
     seconds in Catalyst/codegen compilation. The sign is taken on the
     6dp-rounded dot so a sub-1e-6 cross-engine residue can't flip a bit.
     """
-    c = srp_coeffs(dim, n_bits)
+    c = _literal_coeffs(dim, n_bits)
     # ONE nested-array literal instead of n_bits × dim Literal nodes: the
     # flat form put 512 leaf nodes through every Catalyst pass and analysis
     # alone cost ~0.5 s per action; indexing the 2-D literal yields the
@@ -171,9 +162,9 @@ def srp_bucket_portable(vec_col, dim: int, n_bits: int):
     return bucket.cast("int")
 
 
-def srp_bucket_portable_sql(vec_expr: str, dim: int, n_bits: int) -> str:
-    """DuckDB mirror of srp_bucket_portable (same literals, same add order)."""
-    c = srp_coeffs(dim, n_bits)
+def srp_bucket_sql(vec_expr: str, dim: int, n_bits: int) -> str:
+    """DuckDB mirror of srp_bucket (same literals, same add order)."""
+    c = _literal_coeffs(dim, n_bits)
     bits = []
     for j in range(n_bits):
         dot = " + ".join(f"{vec_expr}[{i + 1}] * {float(c[i][j])}" for i in range(dim))
@@ -181,7 +172,7 @@ def srp_bucket_portable_sql(vec_expr: str, dim: int, n_bits: int) -> str:
     return "(" + " + ".join(bits) + ")::INT"
 
 
-def srp_topk_portable(
+def srp_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
@@ -192,12 +183,17 @@ def srp_topk_portable(
     qid_col: str = "query_id",
     qvec_col: str = "query_vec",
 ) -> DataFrame:
-    """Oracle-checkable approximate top-k: portable SRP buckets, multi-probe
-    (exact bucket + 1-bit flips = Hamming ≤ 1 candidates), exact cosine on
-    candidates. Same plan shape as srp_topk — bucket equi-join, never a
-    cross product against the corpus."""
-    c = corpus.withColumn("bucket", srp_bucket_portable(F.col(vec_col), dim, n_bits))
-    q = queries.withColumn("_qb", srp_bucket_portable(F.col(qvec_col), dim, n_bits))
+    """Oracle-checkable approximate top-k: SRP buckets, multi-probe (exact
+    bucket + 1-bit flips = Hamming ≤ 1 candidates), exact cosine on
+    candidates. A bucket equi-join, never a cross product against the
+    corpus.
+
+    Query ids (``qid_col``) and corpus ids (``id_col``) must each be unique:
+    candidates are not de-duplicated, so a repeated id yields repeated
+    (query, vec) rows in the top-k window.
+    """
+    c = corpus.withColumn("bucket", srp_bucket(F.col(vec_col), dim, n_bits))
+    q = queries.withColumn("_qb", srp_bucket(F.col(qvec_col), dim, n_bits))
     probes = F.array(
         F.col("_qb"), *[F.col("_qb").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)]
     )
@@ -208,39 +204,6 @@ def srp_topk_portable(
     # single-bit flips), so a (query, vec) pair can match at most one probe
     # row — the former dropDuplicates was a semantically dead exchange
     # (guide §2.4; the DuckDB mirror has no DISTINCT either)
-    scored = cand.select(
-        F.col(qid_col),
-        F.col(id_col),
-        cosine_sim(F.col(vec_col), F.col(qvec_col)).alias("cosine"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def srp_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_bits: int = 12,
-    dim: int = 32,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
-) -> DataFrame:
-    """Approximate top-k: SRP bucket equi-join (multi-probe: exact bucket +
-    all 1-bit flips of the query bucket) → exact cosine on candidates."""
-    c = corpus.withColumn("bucket", srp_bucket(F.col(vec_col), n_bits, dim, seed))
-    q = queries.withColumn("_qb", srp_bucket(F.col(qvec_col), n_bits, dim, seed))
-    probes = F.array(
-        F.col("_qb"), *[F.col("_qb").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)]
-    )
-    q = q.select(qid_col, qvec_col, F.explode(probes).alias("bucket"))
-    cand = c.join(F.broadcast(q), "bucket")
-    # one bucket per corpus vector + pairwise-distinct probe values ⇒ a
-    # (query, vec) pair matches at most once; no dedup exchange needed
-    # (same argument as srp_topk_portable)
     scored = cand.select(
         F.col(qid_col),
         F.col(id_col),
@@ -282,6 +245,10 @@ def ivf_topk(
     centroid). Cell ranking uses round(cosine, 6) with a centroid-id
     tiebreak so a sub-1e-6 floating-point residue can't flip an assignment
     between engines.
+
+    Query ids (``qid_col``) and corpus ids (``id_col``) must each be unique:
+    candidates are not de-duplicated, so a repeated id yields repeated
+    (query, vec) rows in the top-k window.
     """
     if centroids is None:
         centroids = (

@@ -35,12 +35,6 @@ from ..functions.urlnorm import surt_url, url_host
 from .frontier import ScheduleResult, priority_frontier, reference_schedule
 from .politeness import apply_robots, budget_waves, salt_hot_hosts, skew_census, split_wave
 
-CORPUS_FETCH_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, caption string, "
-    "phash long, embedding array<float>, url string, source_id int, seq long, "
-    "wave int"
-)
-
 
 def _codec_udf():
     """Arrow-batched pixel codec: (fetch_hash, w, h, fmt) → struct(bytes,

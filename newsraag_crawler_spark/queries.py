@@ -408,7 +408,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig = d.select(
         "doc_id",
-        minhash_signature(T.shingles_from_words("_w", 3), 8, portable=True).alias("sig"),
+        minhash_signature(T.shingles_from_words("_w", 3), 8).alias("sig"),
     )
     banded = sig.select(
         "doc_id",
@@ -2243,7 +2243,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread(_docs(spark, sf_dir).select("doc_id", "text")).select(
         "doc_id", F.split(T.clean_whitespace(F.lower("text")), " ").alias("tokens")
     )
-    return simhash_relational(d, "doc_id", "tokens", portable=True)
+    return simhash_relational(d, "doc_id", "tokens")
 
 
 def _sql_simhash() -> str:
@@ -2266,7 +2266,7 @@ def q_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-time hyperplanes — the DuckDB oracle reproduces bucket assignment,
     multiprobe candidates and ranking exactly, so the approximate path is
     hash-gated, not rows-only."""
-    from .operators.similarity import srp_topk_portable
+    from .operators.similarity import srp_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
@@ -2274,15 +2274,15 @@ def q_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return srp_topk_portable(
+    return srp_topk(
         emb, queries, k=10, n_bits=_SRP_BITS, dim=_EMB_DIM
     ).select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
 
 
 def _sql_srp_ann() -> str:
-    from .operators.similarity import srp_bucket_portable_sql
+    from .operators.similarity import srp_bucket_sql
 
-    b = srp_bucket_portable_sql("v", _EMB_DIM, _SRP_BITS)
+    b = srp_bucket_sql("v", _EMB_DIM, _SRP_BITS)
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 b AS (SELECT vec_id, v, {b} AS bucket FROM e),
@@ -2479,7 +2479,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Near-dups synthesized by perturbing one coordinate of every 10th vector;
     the oracle mirrors the SAME bucketed algorithm (like the MinHash-LSH
     gate), so the driver checks implementation equivalence."""
-    from .operators.similarity import cosine_sim, srp_bucket_portable
+    from .operators.similarity import cosine_sim, srp_bucket
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id",
@@ -2493,7 +2493,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     corpus = _spread(emb.unionByName(clones)).withColumn(
-        "bucket", srp_bucket_portable(F.col("embedding"), _EMB_DIM, _SRP_BITS)
+        "bucket", srp_bucket(F.col("embedding"), _EMB_DIM, _SRP_BITS)
     )
     # deliberately NOT checkpointed: with the scan spread, re-running the
     # bucket fold on the second self-join side costs less than the extra
@@ -2523,9 +2523,9 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dedup_embedding() -> str:
-    from .operators.similarity import srp_bucket_portable_sql
+    from .operators.similarity import srp_bucket_sql
 
-    bexpr = srp_bucket_portable_sql("v", _EMB_DIM, _SRP_BITS)
+    bexpr = srp_bucket_sql("v", _EMB_DIM, _SRP_BITS)
     return f"""
 WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 corpus AS (
@@ -2554,7 +2554,7 @@ def q_crawl_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; the DuckDB oracle recomputes the kernel's md5 metadata
     chain (url → caption → image_id → embedding) and the same bucketed
     pairing, so the whole crawl→ANN path is hash-gated."""
-    from .operators.similarity import cosine_sim, srp_bucket_portable
+    from .operators.similarity import cosine_sim, srp_bucket
     from .operators.wave import fetch_images
     from .session import ensure_shipped
     from .sources.synthetic import EMB_DIM
@@ -2581,7 +2581,7 @@ def q_crawl_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.slice("v", 2, EMB_DIM - 1),
             ),
         ).otherwise(F.col("v")),
-    ).withColumn("bucket", srp_bucket_portable(F.col("v"), EMB_DIM, _SRP_BITS))
+    ).withColumn("bucket", srp_bucket(F.col("v"), EMB_DIM, _SRP_BITS))
     # materialize ONCE before the self-join: both join sides derive from the
     # mapInPandas fetch, and a lazy plan re-executes it per side (the r1
     # double-fetch disease). Production gets this for free by committing the
@@ -2609,12 +2609,12 @@ def q_crawl_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_crawl_embedding_neardup() -> str:
-    from .operators.similarity import srp_bucket_portable_sql
+    from .operators.similarity import srp_bucket_sql
     from .sources.synthetic import EMB_DIM
 
     topics = "['EUR/USD', 'Gold', 'S&P 500', 'Crude Oil', 'BTC/USD', 'USD/JPY']"
     seg = "regexp_extract(url, '([^/]*)$', 1)"
-    bexpr = srp_bucket_portable_sql("v", EMB_DIM, _SRP_BITS)
+    bexpr = srp_bucket_sql("v", EMB_DIM, _SRP_BITS)
     return f"""
 WITH fr AS (
   SELECT doc_id AS seq,

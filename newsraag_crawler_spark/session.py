@@ -1,11 +1,12 @@
 """SparkSession factory tuned for this engine.
 
 Local-mode settings mirror what a multi-executor deployment would set via
-spark-submit: AQE on (runtime skew/coalesce re-planning), Arrow enabled for
-every pandas-UDF boundary, shuffle partitions sized to the parallelism
-rather than the 200 default, and a bounded Arrow batch size so that large
-``bytes`` (image payload) columns cannot blow up a single Arrow batch
-(SURVEY.md §7.3 item 4).
+spark-submit: Arrow enabled for every pandas-UDF boundary, shuffle
+partitions sized to the parallelism rather than the 200 default, and a
+bounded Arrow batch size so that large ``bytes`` (image payload) columns
+cannot blow up a single Arrow batch (SURVEY.md §7.3 item 4). AQE (runtime
+skew-join and partition-coalesce re-planning) is on through Spark's own
+defaults; no conf here restates a default.
 """
 
 from __future__ import annotations
@@ -42,24 +43,6 @@ def build_session(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # default 10m under-uses modern executor memory: wave-bounded key
-        # sets (confirmed-seen keys, skew censuses) are tens of MB and are
-        # far cheaper broadcast than shuffled against a frontier. Size-
-        # checked by Catalyst/AQE per join, so an over-estimate degrades to
-        # a shuffle, never an OOM. Deployments override it via extra_conf.
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # the bypass-merge shuffle writer opens reduce-count files PER MAP
-        # TASK when reduce partitions <= 200 — with the 64-partition default
-        # every shuffle paid M×R file creations (measured: a 3 MB 128-part
-        # exchange took 1.0 s vs 0.13 s on the sort path on this box's FS).
-        # The sort-based writer (one file + index per map task) is also the
-        # shape that survives many-map-task clusters (guide §2.2's M×R
-        # small-file blowup). Deployments on file systems where tiny-file
-        # churn is free override it via extra_conf.
-        .config("spark.shuffle.sort.bypassMergeThreshold", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # image `bytes` columns: cap rows per Arrow batch so a batch of

@@ -1,4 +1,4 @@
-"""Similarity: exact cosine top-k vs numpy, SRP-ANN recall."""
+"""Similarity: exact cosine top-k vs numpy, SRP/IVF-ANN recall."""
 
 from __future__ import annotations
 
@@ -69,6 +69,22 @@ def test_srp_topk_recall(spark):
     assert recall >= 0.8, recall
 
 
+def test_srp_bucket_rejects_non_integral_coeffs(spark, monkeypatch):
+    """Coefficients are formatted into a SQL-text literal; a value that is
+    not an integer in [-1000, 1000] must be refused before it is printed."""
+    import pytest
+
+    from newsraag_crawler_spark.operators import similarity
+
+    n_bits = 4
+    monkeypatch.setattr(
+        similarity, "srp_coeffs",
+        lambda dim, n_bits: [[1e-7] + [0] * (n_bits - 1)] + [[0] * n_bits] * (dim - 1),
+    )
+    with pytest.raises(AssertionError, match="srp_coeffs"):
+        similarity.srp_bucket(F.col("embedding"), DIM, n_bits)
+
+
 def test_ivf_topk_good_recall_on_clusters(spark):
     """IVF with seeded centroids on clustered data: the query's cluster-mates
     live in its nearest cells, so 4-probe recall vs exact must be high."""
@@ -96,16 +112,14 @@ def test_bucket_candidates_are_unique_pairs(spark):
     pairwise distinct, so the candidate join can never produce a duplicate
     (query, vec) pair — pinned here so a future probe-scheme change that
     breaks it fails loudly instead of silently duplicating rank inputs."""
-    from newsraag_crawler_spark.operators.similarity import (
-        srp_bucket_portable,
-    )
+    from newsraag_crawler_spark.operators.similarity import srp_bucket
 
     df, _ = _emb_df(spark, n=300)
     n_bits = 6
-    c = df.withColumn("bucket", srp_bucket_portable(F.col("embedding"), DIM, n_bits))
+    c = df.withColumn("bucket", srp_bucket(F.col("embedding"), DIM, n_bits))
     q = df.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
-        srp_bucket_portable(F.col("embedding"), DIM, n_bits).alias("_qb"),
+        srp_bucket(F.col("embedding"), DIM, n_bits).alias("_qb"),
     )
     probes = q.select(
         "query_id",
