@@ -16,6 +16,15 @@ Two drivers:
   global order. (The Bloom two-phase filter, ``dedup.seen_filter_two_phase``,
   is used by the bench and the catalog, not here.)
 
+The wave contract: ``run_scale_wave`` returns exactly the frames
+``run_crawl`` commits, each in its committed schema — ``corpus``,
+``seen_additions``, ``next_frontier``, ``dead``, ``host_attempts`` — plus
+``due`` and the ``_cached`` handles to release. ``run_crawl`` only commits,
+in the order corpus → seen → dead → health → metrics → frontier. The
+frontier overwrite comes last because it is the wave's commit point: a
+crash anywhere before it resumes by rolling the other tables back and
+re-running the whole wave.
+
 The fetch derives all metadata columns JVM-side and runs only the pixel
 codec in an Arrow-batched pandas UDF (bit-compatible with the oracle kernel
 ``sources.synthetic.fetch_payload_py``) — image bytes are born inside
@@ -25,15 +34,23 @@ executor Arrow batches and written straight to parquet, never shuffled
 
 from __future__ import annotations
 
-
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.urlnorm import surt_url, url_host
+from .dedup import exact_dedup
 from .frontier import ScheduleResult, priority_frontier, reference_schedule
-from .politeness import apply_robots, budget_waves, salt_hot_hosts, skew_census, split_wave
+from .politeness import (
+    apply_robots,
+    budget_waves,
+    retry_schedule,
+    salt_hot_hosts,
+    skew_census,
+    split_wave,
+)
 
 
 def _codec_udf():
@@ -281,16 +298,21 @@ def run_crawl(
 
     tables: {'frontier','corpus','seen','metrics'} → SnapshotTable, plus
     OPTIONAL 'dead' (dead-letter URLs after max_attempts) and 'health'
-    (per-wave per-host attempted/failed counts). Each wave commits
-    corpus+seen+frontier+metrics snapshots; a killed run resumes from the
-    frontier table's lineage (wave number) — the Iceberg checkpoint
-    pattern replacing the reference's heartbeat/seen-cache files
-    (`main.py:262-268`, `seen_tracker.py:67-82`).
+    (per-wave per-host attempted/failed counts). run_scale_wave builds each
+    wave's frames; this loop only commits them, in the order corpus → seen
+    → dead → health → metrics → frontier. The frontier overwrite is the
+    wave's commit point: a killed run resumes from the frontier table's
+    lineage (wave number) and rolls the other tables back to their last
+    completed wave — the Iceberg checkpoint pattern replacing the
+    reference's heartbeat/seen-cache files (`main.py:262-268`,
+    `seen_tracker.py:67-82`).
 
     With ``failure_expr`` set (see run_scale_wave), failed fetches re-enter
-    the next wave's frontier with attempt+1 / carried_offset=0 and their
-    progressive timeout budget, and dead-letter into tables['dead'] after
-    ``max_attempts`` (reference R3 progressive timeouts as wave re-entry).
+    the next wave's frontier with attempt+1 and carried_offset=0, and
+    dead-letter into tables['dead'] after ``max_attempts`` (reference R3
+    progressive timeouts as wave re-entry). A retry's timeout budget is
+    derived from its ``attempt`` through politeness.RETRY_TIMEOUTS_S; it is
+    not carried as a frontier column.
 
     With tables['health'] present, a host whose last ``health_streak``
     waves were all complete failures is SKIPPED for the next wave (its
@@ -301,13 +323,12 @@ def run_crawl(
 
     Returns {'waves_run': int, 'last_wave': int}.
     """
-    from pyspark.sql import functions as F
-
     frontier_t, corpus_t, seen_t, metrics_t = (
         tables["frontier"], tables["corpus"], tables["seen"], tables["metrics"],
     )
     dead_t = tables.get("dead")
     health_t = tables.get("health")
+    wave = 0
     if frontier_t.exists():
         lin = frontier_t.current_lineage() or {}
         # loud resume (r4 VERDICT #9): a frontier snapshot whose lineage
@@ -322,60 +343,42 @@ def run_crawl(
             )
         wave = int(lin["next_wave"])
         # idempotent resume: the frontier commit is the wave's commit point.
-        # A crash AFTER corpus/seen appends but BEFORE the frontier overwrite
-        # leaves orphaned corpus/seen/metrics snapshots for wave >= next_wave;
-        # re-running the wave would then append duplicate corpus rows. Roll
-        # those tables back to their last snapshot from a completed wave.
+        # A crash before the frontier overwrite leaves orphaned corpus/seen/
+        # dead/health/metrics snapshots for wave >= next_wave; re-running
+        # the wave would then append duplicate rows. Roll those tables back
+        # to their last snapshot from a completed wave.
         for t in (corpus_t, seen_t, metrics_t, dead_t, health_t):
             if t is not None and t.exists():
                 cur = t.current_lineage() or {}
                 if int(cur.get("wave", -1)) >= wave:
                     t.rollback_where(lambda l, w=wave: int(l.get("wave", -1)) < w)
-        frontier = frontier_t.read()
-    else:
-        wave = 0
-        frontier = seeds
     waves_run = 0
-    # row count of the current frontier, from commit lineage when known.
-    # None = unknown (fresh seeds / resumed table without a count) → probe
-    # once; afterwards every frontier overwrite records its count, so the
-    # loop never issues a per-wave isEmpty() action.
-    n_frontier: int | None = None
-    if frontier_t.exists():
-        lin_rows = (frontier_t.current_lineage() or {}).get("rows")
-        n_frontier = int(lin_rows) if lin_rows is not None else None
     while wave < max_waves:
-        if n_frontier == 0 or (n_frontier is None and frontier.isEmpty()):
+        # row count of the current frontier from its commit lineage; None =
+        # unknown (fresh seeds / a table written without a count) → probe
+        # once. Every overwrite below records its count, so the loop never
+        # issues a per-wave isEmpty() action.
+        if frontier_t.exists():
+            rows = (frontier_t.current_lineage() or {}).get("rows")
+            n_frontier = int(rows) if rows is not None else None
+            if n_frontier == 0:
+                break
+            frontier = frontier_t.read()
+        else:
+            n_frontier, frontier = None, seeds
+        if n_frontier is None and frontier.isEmpty():
             break
-        seen = seen_t.read() if seen_t.exists() else None
         unhealthy = (
             _unhealthy_hosts(health_t, wave, streak=health_streak)
             if health_t is not None
             else None
         )
         out = run_scale_wave(
-            frontier, policies, seen, wave=wave, seed=seed,
-            links_per_page=links_per_page, n_articles=n_articles,
-            failure_expr=failure_expr, max_attempts=max_attempts,
-            unhealthy_hosts=unhealthy,
+            frontier, policies, seen_t.read() if seen_t.exists() else None,
+            wave=wave, seed=seed, links_per_page=links_per_page,
+            n_articles=n_articles, failure_expr=failure_expr,
+            max_attempts=max_attempts, unhealthy_hosts=unhealthy,
         )
-        # slim commit frames (seen keys, next frontier) are written with a
-        # data-derived file count (~2M rows ≈ 60-120 MB per key file, guide-
-        # range output sizing) instead of the wave's full task parallelism:
-        # the coalesce collapses 128 near-empty part files per commit — and
-        # their per-commit footer reads plus the ever-growing multi-snapshot
-        # read listing — into a handful. The corpus commit keeps the fetch
-        # partitioning: coalescing it would serialize the codec stage.
-        # unknown frontier size (fresh seeds without a probed count) keeps
-        # the natural partitioning — never serialize a write blindly
-        n_commit_parts = (
-            max(1, min(1024, n_frontier // 2_000_000 + 1))
-            if n_frontier is not None
-            else None
-        )
-
-        def _sized(df_out):
-            return df_out.coalesce(n_commit_parts) if n_commit_parts else df_out
         # write-then-count: the committed parquet footers give the row count,
         # so the fetch UDF (the costliest stage) executes exactly once
         # stats_cols → per-file manifests (north rule: per-partition lineage
@@ -387,45 +390,24 @@ def run_crawl(
             stats_cols=("image_id",),
         )
         n_fetched = int((corpus_t.current_lineage() or {}).get("rows", 0))
-        seen_t.append(
-            _sized(out["seen_additions"]), lineage={"wave": wave},
-            stats_cols=("key",),
+        # the slim seen keys get a data-derived file count (~2M rows ≈
+        # 60-120 MB per key file) instead of the wave's full task
+        # parallelism: 128 near-empty part files per commit would each cost
+        # a footer read on every later read. The corpus keeps the fetch
+        # partitioning (a coalesce would serialize the codec stage), and an
+        # unknown frontier size keeps the natural one.
+        seen_add = out["seen_additions"]
+        if n_frontier is not None:
+            seen_add = seen_add.coalesce(max(1, min(1024, n_frontier // 2_000_000 + 1)))
+        seen_t.append(seen_add, lineage={"wave": wave}, stats_cols=("key",))
+        if dead_t is not None and failure_expr is not None:
+            dead_t.append(out["dead"], lineage={"wave": wave})
+        if health_t is not None:
+            health_t.append(out["host_attempts"], lineage={"wave": wave})
+        metrics_t.append(
+            spark.createDataFrame([(wave, n_fetched)], "wave int, fetched long"),
+            lineage={"wave": wave},
         )
-        # spill ages: carried_offset = wave_offset - 1 (see priority_frontier)
-        next_frontier = out["spill"].select(
-            "url", "source_id", "feed_rank", "score", "attempt",
-            (F.col("wave_offset") - 1).cast("int").alias("carried_offset"),
-        ).withColumn("wave", F.lit(wave + 1))
-        if "retry" in out:
-            retries = out["retry"].select(
-                "url", "source_id", "feed_rank", "score", "attempt",
-                F.lit(0).cast("int").alias("carried_offset"),
-                F.lit(wave + 1).alias("wave"),
-            )
-            next_frontier = next_frontier.unionByName(retries)
-            if dead_t is not None:
-                dead_t.append(
-                    out["dead"].select("url", "host", "source_id", "attempt"),
-                    lineage={"wave": wave},
-                )
-        if "deferred" in out:
-            next_frontier = next_frontier.unionByName(
-                out["deferred"].select(
-                    "url", "source_id", "feed_rank", "score", "attempt",
-                    "carried_offset",
-                ).withColumn("wave", F.lit(wave + 1))
-            )
-        if "new_links" in out:
-            fresh = out["new_links"].select(
-                "url",
-                F.lit(-1).alias("source_id"),
-                F.xxhash64("url").alias("feed_rank"),
-                F.lit(0.5).alias("score"),
-                F.lit(0).alias("attempt"),
-                F.lit(None).cast("int").alias("carried_offset"),
-                F.lit(wave + 1).alias("wave"),
-            )
-            next_frontier = next_frontier.unionByName(fresh)
         # frontier files record score + carried politeness offset bounds —
         # the "frontier offset" half of the per-partition lineage contract
         # REBALANCE, not coalesce: next_frontier contains the link-dedup
@@ -434,29 +416,16 @@ def run_crawl(
         # AQE rebalance keeps reduce parallelism and sizes output files by
         # the advisory partition size instead
         frontier_t.overwrite(
-            next_frontier.hint("rebalance"),
+            out["next_frontier"].hint("rebalance"),
             lineage={"next_wave": wave + 1, "prev_fetched": n_fetched},
             count_rows=True,
             stats_cols=("score", "carried_offset"),
         )
-        if health_t is not None:
-            health_t.append(
-                out["host_attempts"].withColumn("wave", F.lit(wave)),
-                lineage={"wave": wave},
-            )
-        metrics_t.append(
-            spark.createDataFrame(
-                [(wave, n_fetched)], "wave int, fetched long"
-            ),
-            lineage={"wave": wave},
-        )
-        # all consumers of this wave's cached frames have executed (corpus/
-        # seen/frontier commits) — release the blocks or they accumulate
-        # across waves (cached-block growth == the bench.py:229 disease)
-        out["_due_cached"].unpersist()
-        out["_frontier_cached"].unpersist()
-        frontier = frontier_t.read()
-        n_frontier = int((frontier_t.current_lineage() or {}).get("rows", 0))
+        # all consumers of this wave's cached frames have executed — release
+        # the blocks or they accumulate across waves (cached-block growth ==
+        # the bench.py:229 disease)
+        for df in out["_cached"]:
+            df.unpersist()
         wave += 1
         waves_run += 1
     return {"waves_run": waves_run, "last_wave": wave - 1}
@@ -474,33 +443,44 @@ def run_scale_wave(
     failure_expr=None,
     max_attempts: int = 3,
     unhealthy_hosts: DataFrame | None = None,
-) -> dict[str, DataFrame]:
+) -> dict:
     """Production wave over a frontier (url, source_id, feed_rank, score
     [, attempt, carried_offset]).
 
-    Returns dict of DataFrames: corpus (fetched rows), seen_additions,
-    spill (budget-deferred frontier rows), blocked (robots), new_links
-    (discovered frontier candidates, canonicalized + within-wave deduped),
-    host_attempts (per-host attempted/failed counts for the health gate).
-    All lazy — caller commits them to snapshot tables.
+    Returns every frame run_crawl commits, already in its committed schema
+    (all lazy):
+
+    - ``corpus``: fetched rows;
+    - ``seen_additions``: (key) of the succeeded and dead-lettered rows;
+    - ``next_frontier``: the frontier table's rows for wave ``wave + 1``;
+    - ``dead``: (url, host, source_id, attempt) of exhausted retries;
+    - ``host_attempts``: (host, attempted, failed, wave) for the health gate;
+    - ``due``: the rows scheduled this wave;
+    - ``_cached``: the persisted frames, for the caller to unpersist once
+      the wave's commits have run.
+
+    The next frontier is the union of: budget-spilled rows (carried_offset
+    = wave_offset - 1, see priority_frontier), retries (carried_offset 0),
+    health-deferred rows (unchanged) and, with ``links_per_page`` > 0,
+    links discovered on the fetched pages (canonicalized, within-wave
+    deduped).
 
     Failure + retry (r4 VERDICT #6, reference progressive timeouts
     `crawl4ai_extractor.py:108,128-193`): ``failure_expr`` is an injectable
     boolean Column over the scheduled rows (may reference ``host``/``url``/
     ``attempt``) marking fetches that FAIL this wave — the synthetic stand-
     in for network errors. Failed rows skip the fetch and are split by
-    operators.politeness.retry_schedule into ``retry`` (re-enter the next
-    wave with attempt+1 and the progressive timeout budget) and ``dead``
-    (exhausted max_attempts). Failed-but-retryable URLs are NOT marked
-    seen — only successes and dead-letters are — so the seen anti-join
-    cannot swallow a retry. failure_expr=None keeps the zero-overhead
-    no-failure path (bench/production default: real fetch errors would
-    surface as a success column from the fetch stage itself).
+    operators.politeness.retry_schedule into retries (next wave, attempt+1)
+    and ``dead`` (exhausted max_attempts). Failed-but-retryable URLs are
+    NOT marked seen — only successes and dead-letters are — so the seen
+    anti-join cannot swallow a retry. With failure_expr=None every row
+    succeeds; Catalyst folds the constant, so the retry and dead branches
+    are empty relations that cost no job.
 
     Health gate (r4 VERDICT #7, reference `main.py:362-374` skips
     unhealthy sources per cycle): ``unhealthy_hosts`` (tiny dim: host) is
-    anti-joined out BEFORE robots/seen work; skipped rows come back as
-    ``deferred`` so they re-enter the next wave's frontier unconsumed.
+    anti-joined out BEFORE robots/seen work; the skipped rows re-enter the
+    next frontier unconsumed.
     """
     for col, default in (("attempt", F.lit(0)), ("carried_offset", F.lit(None).cast("int"))):
         if col not in frontier.columns:
@@ -510,9 +490,8 @@ def run_scale_wave(
     # repartition key and both window chains — predicate pushdown SUBSTITUTES
     # the full regex tree into each (measured ~1 ms/row executor time, ~7x
     # the single-evaluation cost; bench.py's wave avoids the same disease
-    # with an eager checkpoint). The cache materializes each column once;
-    # run_crawl releases the blocks with the wave's other cache handle.
-    f = (
+    # with an eager checkpoint). The cache materializes each column once.
+    canon = (
         frontier.withColumn("surt_url", surt_url(F.col("url")))
         .withColumn("host", url_host(F.col("url")))
         .withColumn(
@@ -520,33 +499,29 @@ def run_scale_wave(
         )
         .persist()
     )
-    out: dict[str, DataFrame] = {}
-    if unhealthy_hosts is not None:
-        dim = F.broadcast(unhealthy_hosts.select("host"))
-        out["deferred"] = f.join(dim, "host", "left_semi")
-        f = f.join(dim, "host", "left_anti")
-    allowed, blocked = apply_robots(f, policies)
+    dim = None if unhealthy_hosts is None else F.broadcast(unhealthy_hosts.select("host"))
+    f = canon if dim is None else canon.join(dim, "host", "left_anti")
+    allowed, _ = apply_robots(f, policies)
     if seen is not None:
         allowed = allowed.join(
             seen.select(F.col("key").alias("surt_url")), "surt_url", "left_anti"
         )
-    # within-wave dedup on the canonical key: first by (score desc, rank)
-    from .dedup import exact_dedup
-
     # EXPLICIT partition counts on the two window exchanges (dedup key,
-    # then host): AQE coalesces these byte-small shuffles down to a
-    # defaultParallelism-derived handful (measured 9 partitions at
-    # local[8]), serializing the window sorts into straggler rounds. The
-    # explicit hash partitioning satisfies each window's required
-    # distribution, so no additional exchange is introduced — same shuffle
-    # count, full parallelism.
-    n_wave_parts = frontier.sparkSession.sparkContext.defaultParallelism * 4
+    # then host) and the fetch exchange: AQE coalesces these byte-small
+    # shuffles down to a defaultParallelism-derived handful (measured 9
+    # partitions at local[8]), serializing the window sorts into straggler
+    # rounds — and the compute-heavy fetch UDF, whose pre-fetch rows are
+    # tiny but each cost ~ms of codec work. The explicit hash partitioning
+    # satisfies each window's required distribution, so no additional
+    # exchange is introduced — same shuffle count, full parallelism.
+    n_parts = frontier.sparkSession.sparkContext.defaultParallelism * 4
+    # within-wave dedup on the canonical key: first by (score desc, rank)
     allowed = exact_dedup(
-        allowed.repartition(n_wave_parts, F.col("surt_url")),
+        allowed.repartition(n_parts, F.col("surt_url")),
         ["surt_url"], ["feed_rank", "url"],
     )
     ranked = priority_frontier(
-        allowed.repartition(n_wave_parts, F.col("host")), rank_col="feed_rank"
+        allowed.repartition(n_parts, F.col("host")), rank_col="feed_rank"
     )
     # census, salting, seen_additions, fetch AND the spill commit all consume
     # branches of `budgeted`; persist it (not just `due`) so the upstream
@@ -555,66 +530,39 @@ def run_scale_wave(
     # re-executing the whole chain a second time per wave
     budgeted = budget_waves(ranked, policies).persist()
     due, spill = split_wave(budgeted)
-    if failure_expr is None:
-        due_ok = due
-        seen_keys = due.select("surt_url")
-        host_attempts = due.groupBy("host").agg(
-            F.count("*").alias("attempted"), F.lit(0).cast("long").alias("failed")
-        )
-    else:
-        from .politeness import retry_schedule
-
-        attempted = due.withColumn("success", ~failure_expr)
-        succeeded, retry, dead = retry_schedule(attempted, max_attempts=max_attempts)
-        due_ok = succeeded
-        out["retry"] = retry
-        out["dead"] = dead
-        seen_keys = succeeded.select("surt_url").unionByName(dead.select("surt_url"))
-        host_attempts = attempted.groupBy("host").agg(
-            F.count("*").alias("attempted"),
-            F.sum((~F.col("success")).cast("long")).alias("failed"),
-        )
-    census = skew_census(due_ok, threshold=skew_threshold)
-    salted = salt_hot_hosts(due_ok, census)
-    # politeness groups stay intact per host; fetch partitions by fetch_key.
-    # EXPLICIT partition count: AQE coalesces byte-small shuffles to one
-    # partition, which would serialize the compute-heavy fetch UDF — the
-    # pre-fetch rows are tiny but each costs ~ms of codec work downstream.
-    n_fetch_parts = frontier.sparkSession.sparkContext.defaultParallelism * 4
-    scheduled = salted.repartition(n_fetch_parts, F.col("fetch_key")).withColumn(
+    attempted = due.withColumn(
+        "success", F.lit(True) if failure_expr is None else ~failure_expr
+    )
+    succeeded, retry, dead = retry_schedule(attempted, max_attempts=max_attempts)
+    host_attempts = attempted.groupBy("host").agg(
+        F.count("*").alias("attempted"),
+        F.sum((~F.col("success")).cast("long")).alias("failed"),
+    ).withColumn("wave", F.lit(wave))
+    census = skew_census(succeeded, threshold=skew_threshold)
+    # politeness groups stay intact per host; fetch partitions by fetch_key
+    scheduled = salt_hot_hosts(succeeded, census).repartition(
+        n_parts, F.col("fetch_key")
+    ).withColumn(
         "source_name", F.concat(F.lit("src"), F.col("source_id").cast("string"))
     ).withColumn("seq", F.col("host_rank").cast("long"))
-    corpus = fetch_images(scheduled, seed=seed, wave=wave)
 
-    out.update({
-        "corpus": corpus,
-        "seen_additions": seen_keys.select(F.col("surt_url").alias("key")),
-        "spill": spill,
-        "blocked": blocked,
-        "host_attempts": host_attempts,
-        "due": due,
-        # handles for the caller to unpersist once the wave's commits are
-        # done (`budgeted` — due AND spill filter from it — and the
-        # canonicalized frontier `f`)
-        "_due_cached": budgeted,
-        "_frontier_cached": f,
-    })
+    carry = ("url", "source_id", "feed_rank", "score", "attempt")
+    carried = [
+        spill.select(*carry, (F.col("wave_offset") - 1).cast("int").alias("carried_offset")),
+        retry.select(*carry, F.lit(0).cast("int").alias("carried_offset")),
+    ]
+    if dim is not None:
+        carried.append(canon.join(dim, "host", "left_semi").select(*carry, "carried_offset"))
     if links_per_page > 0:
         # deterministic synthetic link graph: page /articles/i links to
         # /articles/(i*7+j) mod N on the same host
         art = F.regexp_extract(F.col("url"), "/articles/([0-9]+)", 1).cast("long")
         n_mod = F.lit(n_articles or 1_000_000)
         # links come from FETCHED pages only: a failed fetch discovers nothing
-        links = due_ok.select(
-            "url",
+        links = succeeded.select(
             "host",
             F.explode(
-                F.array(
-                    *[
-                        F.pmod(art * 7 + F.lit(j), n_mod)
-                        for j in range(links_per_page)
-                    ]
-                )
+                F.array(*[F.pmod(art * 7 + F.lit(j), n_mod) for j in range(links_per_page)])
             ).alias("to_art"),
         ).select(
             F.concat(
@@ -625,5 +573,23 @@ def run_scale_wave(
         new = links.withColumn("surt_url", surt_url(F.col("url"))).dropDuplicates(
             ["surt_url"]
         )
-        out["new_links"] = new
-    return out
+        carried.append(new.select(
+            "url",
+            F.lit(-1).alias("source_id"),
+            F.xxhash64("url").alias("feed_rank"),
+            F.lit(0.5).alias("score"),
+            F.lit(0).alias("attempt"),
+            F.lit(None).cast("int").alias("carried_offset"),
+        ))
+    next_frontier = reduce(DataFrame.unionByName, carried)
+    return {
+        "corpus": fetch_images(scheduled, seed=seed, wave=wave),
+        "seen_additions": succeeded.select(F.col("surt_url").alias("key")).unionByName(
+            dead.select(F.col("surt_url").alias("key"))
+        ),
+        "next_frontier": next_frontier.withColumn("wave", F.lit(wave + 1)),
+        "dead": dead.select("url", "host", "source_id", "attempt"),
+        "host_attempts": host_attempts,
+        "due": due,
+        "_cached": (budgeted, canon),
+    }

@@ -31,7 +31,10 @@ code only touches this narrow interface, deliberately.
 
 Lineage schema per table (r4 VERDICT #9 — the resume contract; writers
 MUST record these keys or run_crawl's resume refuses loudly instead of
-silently restarting at wave 0):
+silently restarting at wave 0). The frontier overwrite is each wave's LAST
+commit: every other table's snapshot of wave w lands before it, and a
+resume rolls back any snapshot with ``wave`` >= the frontier's
+``next_wave``:
 
 ===========  ==============================================================
 table        required lineage keys (written by operators.wave.run_crawl)

@@ -197,18 +197,27 @@ def test_retry_waves_and_dead_letter(spark, tmp_path):
 
 
 def test_retry_carries_progressive_timeout(spark):
-    """The wave-level retry rows carry the reference's progressive timeout
-    for their NEXT attempt ([30,60,120]s, crawl4ai_extractor.py:108)."""
+    """A failed fetch re-enters the next frontier with attempt+1 and
+    carried_offset 0; its progressive timeout for that attempt
+    ([30,60,120]s, crawl4ai_extractor.py:108) is derived from ``attempt``
+    through RETRY_TIMEOUTS_S (retry_schedule's timeout_s column is checked
+    in test_politeness::test_retry_schedule_waves)."""
+    from newsraag_crawler_spark.operators.politeness import RETRY_TIMEOUTS_S
     from newsraag_crawler_spark.operators.wave import run_scale_wave
 
     out = run_scale_wave(
         _seeds(spark), _policies(spark), None, wave=0,
         failure_expr=F.col("host") == "host1.example.com",
     )
-    r = out["retry"].select("attempt", "timeout_s").distinct().collect()
-    assert [(x.attempt, x.timeout_s) for x in r] == [(1, 60)]
-    out["_due_cached"].unpersist()
-    out["_frontier_cached"].unpersist()
+    # no spill (10 rows per host, budget 15) and no links: the next
+    # frontier is exactly host1's 10 retries
+    rows = out["next_frontier"].collect()
+    assert len(rows) == 10
+    assert all("host1.example.com" in r.url for r in rows)
+    assert {(r.attempt, r.carried_offset, r.wave) for r in rows} == {(1, 0, 1)}
+    assert RETRY_TIMEOUTS_S[rows[0].attempt] == 60
+    for df in out["_cached"]:
+        df.unpersist()
 
 
 def test_unhealthy_host_skipped_then_resumes(spark, tmp_path):
@@ -262,10 +271,7 @@ def test_spill_aging_cannot_be_starved(spark):
              robots_disallow=["/never-matches"])]
     )
     out0 = run_scale_wave(seeds, pol, None, wave=0)
-    spill = out0["spill"].select(
-        "url", "source_id", "feed_rank", "score", "attempt",
-        (F.col("wave_offset") - 1).cast("int").alias("carried_offset"),
-    ).withColumn("wave", F.lit(1))
+    spill = out0["next_frontier"]
     assert spill.count() == 7
     # adversarial wave-1 arrivals: same host, sky-high score
     shiny = spark.createDataFrame(
@@ -283,8 +289,8 @@ def test_spill_aging_cannot_be_starved(spark):
     # (feed_rank 3,4,5 — score order = rank order here), NOT the shiny ones
     assert due1 == {f"https://h.example.com/articles/{i}" for i in (3, 4, 5)}
     for o in (out0, out1):
-        o["_due_cached"].unpersist()
-        o["_frontier_cached"].unpersist()
+        for df in o["_cached"]:
+            df.unpersist()
 
 
 def test_resume_refuses_lineage_missing_next_wave(spark, tmp_path):
@@ -313,3 +319,74 @@ def test_no_cached_block_growth_across_waves(spark, tmp_path):
     )
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     assert after - before == set(), f"leaked persisted RDDs: {after - before}"
+
+
+class _CrashOnWave1(SnapshotTable):
+    """A table whose wave-1 append dies before writing anything."""
+
+    def append(self, df, lineage=None, **kw):
+        if (lineage or {}).get("wave") == 1:
+            raise RuntimeError("simulated crash in the wave-1 append")
+        return super().append(df, lineage=lineage, **kw)
+
+
+def test_torn_tail_commit_resumes_health_and_metrics(spark, tmp_path):
+    """A crash in the LAST non-frontier commit of a wave (the metrics
+    append) must not lose that wave's health and metrics rows: the frontier
+    overwrite comes after them, so the resume re-runs the wave and commits
+    both tables exactly once."""
+    import pytest
+
+    seeds, pol = _seeds(spark), _policies(spark)
+    t = _tables(spark, tmp_path, "torn")
+    t["health"] = SnapshotTable(spark, str(tmp_path / "torn" / "health"))
+    t["metrics"] = _CrashOnWave1(spark, str(tmp_path / "torn" / "metrics"))
+    with pytest.raises(RuntimeError, match="wave-1 append"):
+        run_crawl(spark, seeds, pol, t, max_waves=2, links_per_page=2, n_articles=N_ART)
+    assert t["frontier"].current_lineage()["next_wave"] == 1
+
+    t2 = _tables(spark, tmp_path, "torn")
+    t2["health"] = SnapshotTable(spark, str(tmp_path / "torn" / "health"))
+    res = run_crawl(spark, seeds, pol, t2, max_waves=2, links_per_page=2, n_articles=N_ART)
+    assert res == {"waves_run": 1, "last_wave": 1}
+    assert sorted(r.wave for r in t2["metrics"].read().collect()) == [0, 1]
+    health = t2["health"].read()
+    assert {r.wave for r in health.select("wave").distinct().collect()} == {0, 1}
+    # the half-committed wave-1 health snapshot was rolled back, not doubled
+    assert health.count() == health.select("host", "wave").distinct().count()
+    corpus = t2["corpus"].read()
+    assert corpus.count() == corpus.select("url").distinct().count()
+
+
+def test_crawl_job_and_stage_counts_are_bounded(spark, tmp_path):
+    """Spark jobs and stages per resuming run_crawl call, all six tables,
+    failures, retries, dead letters, a health skip and links. Upper bounds
+    pinned at this session's cpus=8, shuffle_partitions=8: the wave reads
+    its frontier once, at the top of the loop, and the final wave issues no
+    read of the frontier it leaves for the next call."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    t = _tables(spark, tmp_path, "jobs")
+    t["dead"] = SnapshotTable(spark, str(tmp_path / "jobs" / "dead"))
+    t["health"] = SnapshotTable(spark, str(tmp_path / "jobs" / "health"))
+    seeds, pol = _seeds(spark), _policies(spark)
+    counts = []
+    for max_waves in (1, 2, 3):
+        group = f"crawl-job-count-{tmp_path.name}-{max_waves}"
+        sc.setJobGroup(group, group)
+        try:
+            run_crawl(
+                spark, seeds, pol, t, max_waves=max_waves, links_per_page=2,
+                n_articles=N_ART, failure_expr=F.col("host") == "host3.example.com",
+                max_attempts=2, health_streak=1,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the async listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        counts.append((len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)))
+    assert t["frontier"].current_lineage()["next_wave"] == 3
+    bounds = [(18, 46), (25, 54), (25, 54)]
+    assert all(j <= bj and s <= bs for (j, s), (bj, bs) in zip(counts, bounds)), counts
