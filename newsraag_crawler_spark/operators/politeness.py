@@ -18,9 +18,13 @@ Operators:
   reference's reset-per-run bug-shape, SURVEY.md §7.3.5).
 - ``salt_hot_hosts``   — AFTER budgeting, split each scheduled host group
   across ``n_salts`` shuffle keys when its wave row-count exceeds a
-  threshold (skew census), so one hot host cannot serialize a partition.
-  Budgets are computed BEFORE salting — per-host politeness is global even
-  when the host's rows are spread over many partitions (SURVEY.md §7.3.3).
+  threshold (``skew_census``), so one hot host cannot serialize a
+  partition. Budgets are computed BEFORE salting — per-host politeness is
+  global even when the host's rows are spread over many partitions
+  (SURVEY.md §7.3.3). The production wave (operators.wave.run_scale_wave)
+  no longer salts: with budgets assigned first, its fetch places rows by
+  URL hash, one task per core. The census and salting stay for the bench
+  harness and the traced benchmark composition.
 """
 
 from __future__ import annotations

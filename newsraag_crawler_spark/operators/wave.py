@@ -4,7 +4,7 @@ One wave = one reference crawl cycle (`/root/reference/main.py:280,571-649`)
 re-expressed as a batch dataflow:
 
     frontier → canonicalize → robots → seen-filter → priority+budget →
-    (salt hot hosts) → FETCH (deterministic synthetic, Arrow-batched) →
+    place by URL hash → FETCH (deterministic synthetic, Arrow-batched) →
     link-expand → commit corpus+seen+frontier snapshots (+ lineage)
 
 Two drivers:
@@ -12,9 +12,10 @@ Two drivers:
   (operators.frontier.reference_schedule) + fetch + snapshot commits. The
   parity surface for the oracle tests.
 - ``run_scale_wave``        — the production path: per-host politeness,
-  exact anti-join against the whole ``seen`` table, skew salting. No
-  global order. (The Bloom two-phase filter, ``dedup.seen_filter_two_phase``,
-  is used by the bench and the catalog, not here.)
+  exact anti-join against the whole ``seen`` table, URL-hash fetch
+  placement. No global order. (The Bloom two-phase filter,
+  ``dedup.seen_filter_two_phase``, is used by the bench and the catalog,
+  not here.)
 
 The wave contract: ``run_scale_wave`` returns exactly the frames
 ``run_crawl`` commits, each in its committed schema — ``corpus``,
@@ -37,20 +38,14 @@ from __future__ import annotations
 from functools import reduce
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.urlnorm import surt_url, url_host
 from .dedup import exact_dedup
 from .frontier import ScheduleResult, priority_frontier, reference_schedule
-from .politeness import (
-    apply_robots,
-    budget_waves,
-    retry_schedule,
-    salt_hot_hosts,
-    skew_census,
-    split_wave,
-)
+from .politeness import apply_robots, budget_waves, retry_schedule, split_wave
 
 
 def _codec_udf():
@@ -321,6 +316,9 @@ def run_crawl(
     leaves no health row, which breaks the streak, so the host is
     re-probed one wave later and resumes fully once a fetch succeeds.
 
+    ``policies`` is persisted for the duration of the call and released on
+    return, unless the caller already cached it.
+
     Returns {'waves_run': int, 'last_wave': int}.
     """
     frontier_t, corpus_t, seen_t, metrics_t = (
@@ -353,81 +351,97 @@ def run_crawl(
                 if int(cur.get("wave", -1)) >= wave:
                     t.rollback_where(lambda l, w=wave: int(l.get("wave", -1)) < w)
     waves_run = 0
-    while wave < max_waves:
-        # row count of the current frontier from its commit lineage; None =
-        # unknown (fresh seeds / a table written without a count) → probe
-        # once. Every overwrite below records its count, so the loop never
-        # issues a per-wave isEmpty() action.
-        if frontier_t.exists():
-            rows = (frontier_t.current_lineage() or {}).get("rows")
-            n_frontier = int(rows) if rows is not None else None
-            if n_frontier == 0:
+    # every wave broadcasts the policies dim twice (robots, budgets), and
+    # each broadcast re-scans the caller's frame — Python tasks when it is
+    # a local-data createDataFrame. Materialize it once per call; a frame
+    # the caller cached is the caller's to release.
+    owned = policies.storageLevel == StorageLevel.NONE
+    if owned:
+        policies = policies.persist()
+    try:
+        while wave < max_waves:
+            # row count of the current frontier from its commit lineage; None =
+            # unknown (fresh seeds / a table written without a count) → probe
+            # once. Every overwrite below records its count, so the loop never
+            # issues a per-wave isEmpty() action.
+            if frontier_t.exists():
+                rows = (frontier_t.current_lineage() or {}).get("rows")
+                n_frontier = int(rows) if rows is not None else None
+                if n_frontier == 0:
+                    break
+                frontier = frontier_t.read()
+            else:
+                n_frontier, frontier = None, seeds
+            if n_frontier is None and frontier.isEmpty():
                 break
-            frontier = frontier_t.read()
-        else:
-            n_frontier, frontier = None, seeds
-        if n_frontier is None and frontier.isEmpty():
-            break
-        unhealthy = (
-            _unhealthy_hosts(health_t, wave, streak=health_streak)
-            if health_t is not None
-            else None
-        )
-        out = run_scale_wave(
-            frontier, policies, seen_t.read() if seen_t.exists() else None,
-            wave=wave, seed=seed, links_per_page=links_per_page,
-            n_articles=n_articles, failure_expr=failure_expr,
-            max_attempts=max_attempts, unhealthy_hosts=unhealthy,
-        )
-        # write-then-count: the committed parquet footers give the row count,
-        # so the fetch UDF (the costliest stage) executes exactly once
-        # stats_cols → per-file manifests (north rule: per-partition lineage
-        # = partition id + offset/key bounds): corpus files record id
-        # bounds, seen files record their SURT-key range (each seen file is
-        # a key shard; its bounds are what a membership probe prunes on)
-        corpus_t.append(
-            out["corpus"], lineage={"wave": wave}, count_rows=True,
-            stats_cols=("image_id",),
-        )
-        n_fetched = int((corpus_t.current_lineage() or {}).get("rows", 0))
-        # the slim seen keys get a data-derived file count (~2M rows ≈
-        # 60-120 MB per key file) instead of the wave's full task
-        # parallelism: 128 near-empty part files per commit would each cost
-        # a footer read on every later read. The corpus keeps the fetch
-        # partitioning (a coalesce would serialize the codec stage), and an
-        # unknown frontier size keeps the natural one.
-        seen_add = out["seen_additions"]
-        if n_frontier is not None:
-            seen_add = seen_add.coalesce(max(1, min(1024, n_frontier // 2_000_000 + 1)))
-        seen_t.append(seen_add, lineage={"wave": wave}, stats_cols=("key",))
-        if dead_t is not None and failure_expr is not None:
-            dead_t.append(out["dead"], lineage={"wave": wave})
-        if health_t is not None:
-            health_t.append(out["host_attempts"], lineage={"wave": wave})
-        metrics_t.append(
-            spark.createDataFrame([(wave, n_fetched)], "wave int, fetched long"),
-            lineage={"wave": wave},
-        )
-        # frontier files record score + carried politeness offset bounds —
-        # the "frontier offset" half of the per-partition lineage contract
-        # REBALANCE, not coalesce: next_frontier contains the link-dedup
-        # exchange, and a coalesce would collapse that shuffle's reduce side
-        # to the file count (measured: the whole dedup ran on 1 task); the
-        # AQE rebalance keeps reduce parallelism and sizes output files by
-        # the advisory partition size instead
-        frontier_t.overwrite(
-            out["next_frontier"].hint("rebalance"),
-            lineage={"next_wave": wave + 1, "prev_fetched": n_fetched},
-            count_rows=True,
-            stats_cols=("score", "carried_offset"),
-        )
-        # all consumers of this wave's cached frames have executed — release
-        # the blocks or they accumulate across waves (cached-block growth ==
-        # the bench.py:229 disease)
-        for df in out["_cached"]:
-            df.unpersist()
-        wave += 1
-        waves_run += 1
+            unhealthy = (
+                _unhealthy_hosts(health_t, wave, streak=health_streak)
+                if health_t is not None
+                else None
+            )
+            out = run_scale_wave(
+                frontier, policies, seen_t.read() if seen_t.exists() else None,
+                wave=wave, seed=seed, links_per_page=links_per_page,
+                n_articles=n_articles, failure_expr=failure_expr,
+                max_attempts=max_attempts, unhealthy_hosts=unhealthy,
+            )
+            # write-then-count: the committed parquet footers give the row count,
+            # so the fetch UDF (the costliest stage) executes exactly once
+            # stats_cols → per-file manifests (north rule: per-partition lineage
+            # = partition id + offset/key bounds): corpus files record id
+            # bounds, seen files record their SURT-key range (each seen file is
+            # a key shard; its bounds are what a membership probe prunes on)
+            corpus_t.append(
+                out["corpus"], lineage={"wave": wave}, count_rows=True,
+                stats_cols=("image_id",),
+            )
+            n_fetched = int((corpus_t.current_lineage() or {}).get("rows", 0))
+            # the slim seen keys get a data-derived file count (~2M rows ≈
+            # 60-120 MB per key file) instead of the wave's full task
+            # parallelism: 128 near-empty part files per commit would each cost
+            # a footer read on every later read. The corpus keeps the fetch
+            # partitioning (a coalesce would serialize the codec stage), and an
+            # unknown frontier size keeps the natural one.
+            seen_add = out["seen_additions"]
+            if n_frontier is not None:
+                seen_add = seen_add.coalesce(max(1, min(1024, n_frontier // 2_000_000 + 1)))
+            seen_t.append(seen_add, lineage={"wave": wave}, stats_cols=("key",))
+            if dead_t is not None and failure_expr is not None:
+                dead_t.append(out["dead"], lineage={"wave": wave})
+            if health_t is not None:
+                health_t.append(out["host_attempts"], lineage={"wave": wave})
+            # one JVM row in one partition: a local-data createDataFrame
+            # would spend a Python task per core on it
+            metrics_t.append(
+                spark.range(0, 1, 1, 1).select(
+                    F.lit(wave).cast("int").alias("wave"),
+                    F.lit(n_fetched).cast("long").alias("fetched"),
+                ),
+                lineage={"wave": wave},
+            )
+            # frontier files record score + carried politeness offset bounds —
+            # the "frontier offset" half of the per-partition lineage contract
+            # REBALANCE, not coalesce: next_frontier contains the link-dedup
+            # exchange, and a coalesce would collapse that shuffle's reduce side
+            # to the file count (measured: the whole dedup ran on 1 task); the
+            # AQE rebalance keeps reduce parallelism and sizes output files by
+            # the advisory partition size instead
+            frontier_t.overwrite(
+                out["next_frontier"].hint("rebalance"),
+                lineage={"next_wave": wave + 1, "prev_fetched": n_fetched},
+                count_rows=True,
+                stats_cols=("score", "carried_offset"),
+            )
+            # all consumers of this wave's cached frames have executed — release
+            # the blocks or they accumulate across waves (cached-block growth ==
+            # the bench.py:229 disease)
+            for df in out["_cached"]:
+                df.unpersist()
+            wave += 1
+            waves_run += 1
+    finally:
+        if owned:
+            policies.unpersist()
     return {"waves_run": waves_run, "last_wave": wave - 1}
 
 
@@ -464,6 +478,14 @@ def run_scale_wave(
     health-deferred rows (unchanged) and, with ``links_per_page`` > 0,
     links discovered on the fetched pages (canonicalized, within-wave
     deduped).
+
+    Fetch placement: the due rows go to one fetch task per core by URL
+    hash. Per-host budgets are assigned before the fetch (SURVEY.md §7.3
+    item 3), so the fetch needs no host grouping and a hot host cannot
+    serialize a partition; the skew census and hot-host salting
+    (operators.politeness) are no longer needed here. ``skew_threshold`` is
+    ignored: it stays only because perfbench reads its default, and
+    removing it waits for a benchmark change.
 
     Failure + retry (r4 VERDICT #6, reference progressive timeouts
     `crawl4ai_extractor.py:108,128-193`): ``failure_expr`` is an injectable
@@ -507,14 +529,15 @@ def run_scale_wave(
             seen.select(F.col("key").alias("surt_url")), "surt_url", "left_anti"
         )
     # EXPLICIT partition counts on the two window exchanges (dedup key,
-    # then host) and the fetch exchange: AQE coalesces these byte-small
-    # shuffles down to a defaultParallelism-derived handful (measured 9
-    # partitions at local[8]), serializing the window sorts into straggler
-    # rounds — and the compute-heavy fetch UDF, whose pre-fetch rows are
-    # tiny but each cost ~ms of codec work. The explicit hash partitioning
-    # satisfies each window's required distribution, so no additional
-    # exchange is introduced — same shuffle count, full parallelism.
-    n_parts = frontier.sparkSession.sparkContext.defaultParallelism * 4
+    # then host): AQE coalesces these byte-small shuffles down to a
+    # defaultParallelism-derived handful (measured 9 partitions at
+    # local[8]), serializing the window sorts into straggler rounds. The
+    # explicit hash partitioning satisfies each window's required
+    # distribution, so no additional exchange is introduced — same shuffle
+    # count, full parallelism. Both stages run on the JVM only, so their
+    # 4x-cores task count pays no Python worker cost.
+    cores = frontier.sparkSession.sparkContext.defaultParallelism
+    n_parts = cores * 4
     # within-wave dedup on the canonical key: first by (score desc, rank)
     allowed = exact_dedup(
         allowed.repartition(n_parts, F.col("surt_url")),
@@ -523,7 +546,7 @@ def run_scale_wave(
     ranked = priority_frontier(
         allowed.repartition(n_parts, F.col("host")), rank_col="feed_rank"
     )
-    # census, salting, seen_additions, fetch AND the spill commit all consume
+    # host_attempts, seen_additions, fetch AND the spill commit all consume
     # branches of `budgeted`; persist it (not just `due`) so the upstream
     # (canonicalize → robots → seen filter → windows) runs once per wave —
     # persisting only the due branch left the frontier commit's spill filter
@@ -538,11 +561,12 @@ def run_scale_wave(
         F.count("*").alias("attempted"),
         F.sum((~F.col("success")).cast("long")).alias("failed"),
     ).withColumn("wave", F.lit(wave))
-    census = skew_census(succeeded, threshold=skew_threshold)
-    # politeness groups stay intact per host; fetch partitions by fetch_key
-    scheduled = salt_hot_hosts(succeeded, census).repartition(
-        n_parts, F.col("fetch_key")
-    ).withColumn(
+    # one fetch task per core (see "Fetch placement" above): every Python
+    # task pays a fixed worker cost (BENCH/NOTES.md), so more tasks than
+    # cores only add that cost. The explicit count stops AQE from coalescing
+    # the codec stage, whose rows are byte-small but each cost ~ms of codec
+    # work.
+    scheduled = succeeded.repartition(cores, F.xxhash64("url")).withColumn(
         "source_name", F.concat(F.lit("src"), F.col("source_id").cast("string"))
     ).withColumn("seq", F.col("host_rank").cast("long"))
 

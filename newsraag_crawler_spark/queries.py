@@ -2655,9 +2655,10 @@ SELECT seq_a, seq_b, round(cos, 6) AS cosine FROM pairs WHERE cos >= 0.98
 
 def q_crawl_wave_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full scale-mode crawl wave (canonicalize → robots → dedup → priority
-    → per-host budget → salting → REAL mapInPandas fetch), oracle-gated end
-    to end on the metadata path: the DuckDB mirror recomputes which URLs are
-    due (robots prefix filter, score-desc/rank host window, budget cap) AND
+    → per-host budget → URL-hash placement → REAL mapInPandas fetch),
+    oracle-gated end to end on the metadata path: the DuckDB mirror
+    recomputes which URLs are due (robots prefix filter, score-desc/rank
+    host window, budget cap) AND
     every fetched metadata column (image_id/w/h/fmt/caption — the portable
     md5 derivations of the payload kernel). Only the binary codec outputs
     (bytes/phash) stay outside SQL, covered by tests/test_images.py.

@@ -87,7 +87,10 @@ def test_politeness_single_exchange(spark):
 
 def test_fetch_partition_count_explicit(spark):
     """The pre-fetch repartition must carry an explicit partition count so
-    AQE cannot coalesce the codec-heavy UDF stage to one task."""
+    AQE cannot coalesce the codec-heavy UDF stage to one task: one fetch
+    task per core, rows placed by URL hash (no salted host key)."""
+    import re
+
     from pyspark.sql import Row
 
     from newsraag_crawler_spark.operators.wave import run_scale_wave
@@ -100,8 +103,52 @@ def test_fetch_partition_count_explicit(spark):
     )
     out = run_scale_wave(f, pol, None, wave=0)
     n_parts = out["corpus"].rdd.getNumPartitions()
-    expected = spark.sparkContext.defaultParallelism * 4
+    expected = spark.sparkContext.defaultParallelism
     assert n_parts == expected, (n_parts, expected)
+    p = _plan(out["corpus"], mode="simple")
+    fetch_exchange = re.findall(r"Exchange hashpartitioning\(xxhash64\(url#\d+, 42\), (\d+)\)", p)
+    # the AQE plan may print the exchange in both its final and initial plan
+    assert fetch_exchange and set(fetch_exchange) == {str(expected)}, p
+    assert "fetch_key" not in p, p
+
+
+def test_fetch_balances_a_hot_host(spark):
+    """A host holding most of the wave's due rows, within its budget, must
+    not land on one fetch partition: the fetch stage's per-partition row
+    counts stay within 1.3x of their mean."""
+    from collections import Counter
+
+    from pyspark.sql import Row
+
+    from newsraag_crawler_spark.operators.wave import run_scale_wave
+    from newsraag_crawler_spark.sources.synthetic import synth_frontier_df
+
+    hot = "host0.example.com"
+    f = synth_frontier_df(spark, 3000, n_hosts=10, hot_host_pct=80)
+    pol = spark.createDataFrame(
+        [Row(host=hot, crawl_delay_s=1.0, per_wave_budget=5000,
+             robots_disallow=["/private"])]
+    )
+    out = run_scale_wave(f, pol, None, wave=0)
+    corpus = out["corpus"]
+    n_cores = spark.sparkContext.defaultParallelism
+    rows = (
+        corpus.select(
+            F.spark_partition_id().alias("p"),
+            (F.regexp_extract("url", "^https://([^/]+)/", 1) == hot).alias("hot"),
+        )
+        .groupBy("p", "hot").count().collect()
+    )
+    for df in out["_cached"]:
+        df.unpersist()
+    per_part = Counter()
+    for r in rows:
+        per_part[r.p] += r["count"]
+    n_hot = sum(r["count"] for r in rows if r.hot)
+    n_due = sum(per_part.values())
+    assert n_hot >= 0.7 * n_due, (n_hot, n_due)
+    assert max(per_part.values()) / (n_due / n_cores) <= 1.3, per_part
+    assert len(per_part) == corpus.rdd.getNumPartitions() == n_cores, per_part
 
 
 def test_fetch_python_stage_is_narrow(spark):
