@@ -206,9 +206,10 @@ def resize_nn(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
 
 
 def resize_images_udf(out_w: int, out_h: int):
-    """mapInPandas-compatible pandas UDF: resize encoded images to
-    (out_w, out_h), re-encode in the same fmt. Decode→transform→encode
-    stays inside one Arrow batch; pixels never leave the worker."""
+    """Arrow-batched scalar pandas UDF (data, fmt) -> binary: resize
+    encoded images to (out_w, out_h), re-encode in the same fmt.
+    Decode→transform→encode stays inside one Arrow batch; pixels never
+    leave the worker."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("binary")

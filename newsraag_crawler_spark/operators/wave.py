@@ -239,8 +239,8 @@ def run_equivalence_cycle(
     corpus = fetch_images(sched.fetched, seed=seed, wave=wave)
     if corpus_table is not None:
         # write-then-count: count_rows reads the committed parquet footers, so
-        # the expensive fetch UDF executes exactly once (a .count() on the
-        # unpersisted mapInPandas output would run the whole fetch twice)
+        # the fetch plan and its codec pandas UDF execute exactly once (a
+        # separate .count() would execute the fetch plan a second time)
         corpus_table.append(
             corpus, lineage={"wave": wave, "op": "fetch"}, count_rows=True
         )

@@ -2081,8 +2081,9 @@ SELECT page_url, link_pos, link FROM capped WHERE k <= 3
 
 
 def q_fetch_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runs the REAL fetch stage (mapInPandas, Arrow-batched payload kernel)
-    and gates every metadata column — image_id, dims, fmt, caption — against
+    """Runs the REAL fetch stage (JVM metadata columns + the Arrow-batched
+    scalar pandas UDF codec over four narrow columns) and gates every
+    metadata column — image_id, dims, fmt, caption — against
     a pure-SQL recomputation of the kernel's portable-md5 derivations. Only
     bytes/phash (pixel codec outputs) stay outside the SQL oracle; those are
     golden-tested in tests/test_images.py."""
@@ -2544,9 +2545,11 @@ SELECT id_a, id_b, round(cos, 6) AS cosine FROM pairs WHERE cos >= 0.98
 
 
 def q_crawl_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end K1 embedding tier: frontier → REAL fetch (mapInPandas,
-    which now emits the deterministic image_id-seeded embedding column the
-    reference stores per Qdrant point, qdrant_client.py:130-136) → SRP
+    """End-to-end K1 embedding tier: frontier → REAL fetch (fetch_images,
+    which emits the deterministic image_id-seeded embedding column the
+    reference stores per Qdrant point, qdrant_client.py:130-136, as JVM
+    hash math; its Arrow-batched scalar pandas UDF codec over four narrow
+    columns is pruned here, since no pixel column is selected) → SRP
     bucket candidates (Hamming ≤ 1) → exact cosine ≥ 0.98 near-dup pairs.
 
     The frontier repeats every URL twice (doc_id % 60) and the second
@@ -2583,7 +2586,7 @@ def q_crawl_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("v")),
     ).withColumn("bucket", srp_bucket(F.col("v"), EMB_DIM, _SRP_BITS))
     # materialize ONCE before the self-join: both join sides derive from the
-    # mapInPandas fetch, and a lazy plan re-executes it per side (the r1
+    # fetch, and a lazy plan re-executes it per side (the r1
     # double-fetch disease). Production gets this for free by committing the
     # corpus snapshot and reading it back; eager (not lazy) checkpoint
     # because concurrent stages race to fill a lazy persist.
@@ -2655,7 +2658,8 @@ SELECT seq_a, seq_b, round(cos, 6) AS cosine FROM pairs WHERE cos >= 0.98
 
 def q_crawl_wave_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full scale-mode crawl wave (canonicalize → robots → dedup → priority
-    → per-host budget → URL-hash placement → REAL mapInPandas fetch),
+    → per-host budget → URL-hash placement → REAL fetch: the Arrow-batched
+    scalar pandas UDF codec over four narrow columns),
     oracle-gated end to end on the metadata path: the DuckDB mirror
     recomputes which URLs are due (robots prefix filter, score-desc/rank
     host window, budget cap) AND

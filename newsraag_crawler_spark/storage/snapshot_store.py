@@ -5,25 +5,34 @@ from snapshot checkpoints with per-partition lineage) on plain parquet +
 an atomically-replaced JSON manifest:
 
     table_dir/
-      manifest.json                 <- {"current": N, "snapshots": [...]}
+      manifest.json                 <- {"format": 2, "current": N, "snapshots": [...]}
       snap-00001/part-*.parquet     <- data files added by snapshot 1
       snap-00002/...
 
-- A snapshot = the list of data directories visible at that version, a
-  ``lineage`` dict (wave number, row counts, seen-shard parameters, anything
-  the caller records), AND a per-FILE manifest — ``{file, partition_id,
+- A snapshot entry records only what its own commit wrote:
+  ``{id, parent, dir, files, lineage}``. ``dir`` is its ``snap-NNNNN``
+  directory; ``files`` is its per-FILE manifest — ``{file, partition_id,
   rows, stats: {col: [min, max]}}`` read from the parquet footers of the
   files just written (partition id is the writing task's index; bounds
-  cover caller-named columns). That file manifest IS the north rule's
-  per-partition lineage (partition id, frontier offset, seen-key shard
-  bounds) and drives metadata-only pruning: ``current_files()``,
-  ``prune_files()``, ``read_pruned()``. Readers read ONLY directories
-  listed in the current
-  manifest entry — a crashed half-written snapshot directory is invisible,
-  so commits are atomic (write dirs → fsync manifest.tmp → os.replace).
-- ``append`` adds files; ``overwrite`` starts a new file list (used by the
-  compacted ``seen`` table); ``read(version=...)`` is time travel; resume =
-  ``current_lineage()`` after a crash.
+  cover caller-named columns); ``lineage`` is the caller's dict (wave
+  number, row counts, seen-shard parameters, ...). The file manifest IS
+  the north rule's per-partition lineage (partition id, frontier offset,
+  seen-key shard bounds) and drives metadata-only pruning:
+  ``current_files()``, ``prune_files()``, ``read_pruned()``.
+- ``parent`` is the snapshot this one extends. The data visible at version
+  ``v`` is the chain from ``v`` back through its parents, oldest first —
+  like Iceberg, a commit reuses its parent's file list instead of copying
+  it, so the manifest grows with the files written, not with
+  waves x files. ``append`` extends the current snapshot; ``overwrite``
+  (used by the compacted ``seen`` table) and ``delete_where`` start a new
+  chain (``parent`` 0).
+- Readers read ONLY directories on the manifest's chain — a crashed
+  half-written snapshot directory is invisible, so commits are atomic
+  (write dir → fsync manifest.tmp → os.replace). ``read(version=...)`` is
+  time travel; resume = ``current_lineage()`` after a crash.
+- A manifest without the ``"format": 2`` marker was written by the earlier
+  store, whose entries copied the whole visible file list forward; it is
+  refused with ``ValueError`` rather than misread.
 
 On a real cluster this module is replaced 1:1 by an Iceberg catalog
 (``df.writeTo(tbl).append()`` + snapshot summary properties); the engine
@@ -66,6 +75,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 # Spark part files carry the writing task's partition index: part-00007-...
 _PART_FILE_RE = re.compile(r"^part-(\d+)-")
+
+# manifest layout version; a manifest without it is refused, never misread
+_FORMAT = 2
 
 
 def _json_safe(v):
@@ -129,9 +141,16 @@ class SnapshotTable:
 
     def _load(self) -> dict:
         if not os.path.exists(self._manifest_path):
-            return {"current": 0, "snapshots": []}
+            return {"format": _FORMAT, "current": 0, "snapshots": []}
         with open(self._manifest_path) as f:
-            return json.load(f)
+            m = json.load(f)
+        if m.get("format") != _FORMAT:
+            raise ValueError(
+                f"{self._manifest_path} is not a format-{_FORMAT} manifest (its "
+                "snapshots copy the whole visible file list); this store "
+                "cannot read it"
+            )
+        return m
 
     def _commit(self, manifest: dict) -> None:
         tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex}"
@@ -141,6 +160,17 @@ class SnapshotTable:
             os.fsync(f.fileno())
         os.replace(tmp, self._manifest_path)
 
+    @staticmethod
+    def _chain(m: dict, sid: int) -> list[dict]:
+        """Entries visible at snapshot ``sid``: sid and its parents, oldest
+        first ([] if sid is not in the manifest)."""
+        by_id = {s["id"]: s for s in m["snapshots"]}
+        chain = []
+        while sid in by_id:
+            chain.append(by_id[sid])
+            sid = by_id[sid]["parent"]
+        return chain[::-1]
+
     # -- public API ---------------------------------------------------------
 
     def current_version(self) -> int:
@@ -148,41 +178,27 @@ class SnapshotTable:
 
     def current_lineage(self) -> dict | None:
         m = self._load()
-        for s in m["snapshots"]:
-            if s["id"] == m["current"]:
-                return s["lineage"]
-        return None
+        chain = self._chain(m, m["current"])
+        return chain[-1]["lineage"] if chain else None
 
     def _write_snapshot(
-        self,
-        df: DataFrame | None,
-        base_dirs: list[str],
-        lineage: dict,
-        count_rows: bool = False,
-        stats_cols: tuple = (),
-        base_files: list[dict] | None = None,
+        self, df: DataFrame, extend: bool, lineage: dict, count_rows: bool, stats_cols: tuple
     ) -> int:
         m = self._load()
         sid = m["current"] + 1
-        dirs = list(base_dirs)
-        files = list(base_files or [])
-        if df is not None:
-            rel = f"snap-{sid:05d}"
-            snap_dir = os.path.join(self.path, rel)
-            df.write.mode("overwrite").parquet(snap_dir)
-            # per-file (= per writing partition) lineage from the footers of
-            # the files just written — partition id, exact rows, column
-            # bounds — recorded WITHOUT re-executing the (possibly
-            # expensive) plan that produced df and without scanning data
-            files += _file_entries(snap_dir, rel, stats_cols)
-            if count_rows:
-                lineage = {
-                    **lineage,
-                    "rows": sum(e["rows"] for e in files if e["file"].startswith(rel)),
-                }
-            dirs.append(rel)
+        rel = f"snap-{sid:05d}"
+        snap_dir = os.path.join(self.path, rel)
+        df.write.mode("overwrite").parquet(snap_dir)
+        # per-file (= per writing partition) lineage from the footers of the
+        # files just written — partition id, exact rows, column bounds —
+        # recorded WITHOUT re-executing the (possibly expensive) plan that
+        # produced df and without scanning data
+        files = _file_entries(snap_dir, rel, stats_cols)
+        if count_rows:
+            lineage = {**lineage, "rows": sum(e["rows"] for e in files)}
+        parent = m["current"] if extend else 0
         m["snapshots"].append(
-            {"id": sid, "dirs": dirs, "files": files, "lineage": lineage}
+            {"id": sid, "parent": parent, "dir": rel, "files": files, "lineage": lineage}
         )
         m["current"] = sid
         self._commit(m)
@@ -202,13 +218,7 @@ class SnapshotTable:
         (one plan execution total). stats_cols names columns whose per-file
         min/max bounds are recorded in the file manifest (see
         current_files/prune_files)."""
-        m = self._load()
-        cur = next((s for s in m["snapshots"] if s["id"] == m["current"]), None)
-        base = cur["dirs"] if cur else []
-        base_files = (cur or {}).get("files", [])
-        return self._write_snapshot(
-            df, base, lineage or {}, count_rows, stats_cols, base_files
-        )
+        return self._write_snapshot(df, True, lineage or {}, count_rows, stats_cols)
 
     def overwrite(
         self,
@@ -218,34 +228,23 @@ class SnapshotTable:
         stats_cols: tuple = (),
     ) -> int:
         """Replace table contents (compaction / rewrite)."""
-        return self._write_snapshot(df, [], lineage or {}, count_rows, stats_cols)
+        return self._write_snapshot(df, False, lineage or {}, count_rows, stats_cols)
 
     def current_files(self) -> list[dict]:
         """Per-file lineage of the current snapshot: [{file, partition_id,
         rows, stats: {col: [min, max]}}] — the north rule's per-partition
-        lineage (partition id, offset/key bounds) as Iceberg file manifests.
-        Pre-manifest snapshots (older tables) return []."""
+        lineage (partition id, offset/key bounds) as Iceberg file manifests."""
         m = self._load()
-        s = next((x for x in m["snapshots"] if x["id"] == m["current"]), None)
-        return list((s or {}).get("files", []))
+        return [e for s in self._chain(m, m["current"]) for e in s["files"]]
 
     def prune_files(self, col: str, lo=None, hi=None) -> list[str]:
         """Metadata-only file pruning: paths of current-snapshot files whose
         recorded [min, max] bounds for ``col`` intersect [lo, hi] (files
         without bounds for ``col`` are conservatively KEPT). With real
         Iceberg this is the manifest-level partition/file pruning a
-        predicate pushdown triggers.
-
-        Pruning must never DROP data it has no metadata for: a visible dir
-        with no file entries (a snapshot committed before per-file
-        manifests existed) is returned whole, unpruned."""
-        m = self._load()
-        snap = next((s for s in m["snapshots"] if s["id"] == m["current"]), None)
-        if snap is None:
-            return []
-        files = snap.get("files", [])
+        predicate pushdown triggers."""
         keep = []
-        for e in files:
+        for e in self.current_files():
             b = (e.get("stats") or {}).get(col)
             if b is not None:
                 if lo is not None and b[1] < lo:
@@ -253,10 +252,6 @@ class SnapshotTable:
                 if hi is not None and b[0] > hi:
                     continue
             keep.append(os.path.join(self.path, e["file"]))
-        covered = {e["file"].split("/", 1)[0] for e in files}
-        keep += [
-            os.path.join(self.path, d) for d in snap["dirs"] if d not in covered
-        ]
         return keep
 
     def read_pruned(self, col: str, lo=None, hi=None) -> DataFrame:
@@ -286,7 +281,8 @@ class SnapshotTable:
         Orphaned entries with id > the new current are REMOVED from the
         manifest (and their snap directories deleted): the next append reuses
         sid = current + 1, and duplicate-id entries would make read()/
-        current_lineage() resolve to the stale orphan."""
+        current_lineage() resolve to the stale orphan. A parent always has a
+        smaller id, so every kept snapshot's chain stays whole."""
         m = self._load()
         target = 0
         for s in reversed(m["snapshots"]):
@@ -300,25 +296,20 @@ class SnapshotTable:
         m["current"] = target
         self._commit(m)
         # reclaim orphan data dirs AFTER the manifest commit (readers only see
-        # manifest-listed dirs, so this is pure cleanup; each snapshot's own
-        # data lives in its snap-{id} dir — earlier dirs in its list are bases)
+        # directories on a manifest chain, so this is pure cleanup)
         import shutil
 
         for s in orphans:
-            d = os.path.join(self.path, f"snap-{s['id']:05d}")
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(os.path.join(self.path, s["dir"]), ignore_errors=True)
         return target
 
     def read(self, version: int | None = None) -> DataFrame:
         m = self._load()
         sid = version if version is not None else m["current"]
-        snap = next((s for s in m["snapshots"] if s["id"] == sid), None)
-        if snap is None or not snap["dirs"]:
+        chain = self._chain(m, sid)
+        if not chain:
             raise ValueError(f"no snapshot {sid} in {self.path}")
-        paths = [os.path.join(self.path, d) for d in snap["dirs"]]
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.parquet(*(os.path.join(self.path, s["dir"]) for s in chain))
 
     def exists(self) -> bool:
-        m = self._load()
-        return m["current"] > 0
+        return self._load()["current"] > 0

@@ -15,8 +15,9 @@ directly onto Structured Streaming:
 
 ``stream_crawl`` wires a file-source frontier stream through
 canonicalization → streaming dedup → ``foreachBatch`` (the fetch stage runs
-per micro-batch as ordinary batch code — mapInPandas fetch + snapshot
-append, so batch and streaming share one implementation).
+per micro-batch as ordinary batch code — the Arrow-batched scalar pandas
+UDF fetch + snapshot append, so batch and streaming share one
+implementation).
 """
 
 from __future__ import annotations

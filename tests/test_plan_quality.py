@@ -261,14 +261,17 @@ def test_rss_items_parse_pure_jvm(spark):
 
 
 def test_crawl_embedding_neardup_plan(spark):
-    """End-to-end crawl→ANN: the mapInPandas fetch runs exactly ONCE (the
-    corpus is checkpointed before the self-join — a lazy plan re-executes
-    the fetch per join side), and SRP candidates join on bucket equality —
-    never a cartesian against the corpus."""
+    """End-to-end crawl→ANN: the fetch runs exactly ONCE (the corpus is
+    checkpointed before the self-join — a lazy plan re-executes the fetch
+    per join side), and SRP candidates join on bucket equality — never a
+    cartesian against the corpus."""
     from newsraag_crawler_spark.queries import q_crawl_embedding_neardup
 
     p = _plan(q_crawl_embedding_neardup(spark, SF), mode="simple")
-    assert p.count("MapInPandas") == 0, p  # fetch ran once, at checkpoint time
+    # both join sides scan the eager checkpoint, and no Python UDF runs
+    # after it: the fetch ran once, at checkpoint time
+    assert p.count("Scan ExistingRDD") == 2, p
+    assert "ArrowEvalPython" not in p, p
     assert "CartesianProduct" not in p, p
     assert "BroadcastHashJoin" in p or "SortMergeJoin" in p, p
 

@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from urllib.parse import urlparse
 
+import pytest
 from pyspark.sql import functions as F
 
 from newsraag_crawler_spark.storage.snapshot_store import SnapshotTable
@@ -34,11 +37,41 @@ def test_resume_from_lineage(spark, tmp_path):
 
 
 def test_overwrite_compaction(spark, tmp_path):
+    """Every version reads its own parent chain: appends extend it, an
+    overwrite starts a new one, and a rollback across the overwrite followed
+    by an append extends the pre-overwrite chain again."""
     t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.append(spark.range(10))
-    t.overwrite(spark.range(3), lineage={"op": "compact"})
-    assert t.read().count() == 3
-    assert t.read(version=1).count() == 10  # history preserved
+
+    def rows(version=None):
+        return sorted(r.id for r in t.read(version=version).collect())
+
+    def check(lineage, want):
+        assert t.current_lineage() == lineage
+        assert rows() == want[t.current_version()]
+        for k, ids in want.items():
+            assert rows(k) == ids, k
+        got = {urlparse(p).path for p in t.read().inputFiles()}
+        assert got == {os.path.join(t.path, e["file"]) for e in t.current_files()}
+
+    want = {}
+    t.append(spark.range(0, 3), lineage={"wave": 0})
+    want[1] = [0, 1, 2]
+    check({"wave": 0}, want)
+    t.append(spark.range(3, 5), lineage={"wave": 1})
+    want[2] = [0, 1, 2, 3, 4]
+    check({"wave": 1}, want)
+    t.overwrite(spark.range(10, 12), lineage={"wave": 2, "op": "compact"})
+    want[3] = [10, 11]  # history preserved: versions 1-2 still read
+    check({"wave": 2, "op": "compact"}, want)
+    t.append(spark.range(12, 13), lineage={"wave": 3})
+    want[4] = [10, 11, 12]
+    check({"wave": 3}, want)
+    assert t.rollback_where(lambda lin: lin["wave"] < 2) == 2
+    del want[3], want[4]
+    check({"wave": 1}, want)
+    t.append(spark.range(20, 22), lineage={"wave": 2, "redo": True})
+    want[3] = [0, 1, 2, 3, 4, 20, 21]
+    check({"wave": 2, "redo": True}, want)
 
 
 def test_delete_where_retention(spark, tmp_path):
@@ -152,27 +185,54 @@ def test_prune_files_skips_and_read_pruned_is_exact(spark, tmp_path):
     assert t.read_pruned("id", 1050, None).filter(F.col("id") >= 1050).count() == 50
 
 
-def test_prune_never_drops_pre_manifest_dirs(spark, tmp_path):
-    """A snapshot committed before per-file manifests existed has dirs but
-    no file entries — pruning must return those dirs WHOLE, never silently
-    drop their rows."""
+def test_prune_keeps_files_without_bounds(spark, tmp_path):
+    """A snapshot appended without stats_cols has no bounds for the pruned
+    column — pruning must return its files WHOLE, never silently drop
+    their rows, while still pruning the bounded snapshot below it."""
     t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.append(spark.range(0, 100, 1, 2), stats_cols=("id",))
-    # simulate the legacy snapshot: strip its file entries from the manifest
-    m = json.load(open(t._manifest_path))
-    for s in m["snapshots"]:
-        s.pop("files", None)
-    t._commit(m)
-    # new-era append on top of the legacy base
-    t.append(spark.range(100, 200, 1, 2), stats_cols=("id",))
-    # a range entirely inside the NEW files must still include the legacy
-    # dir (conservative), so no row goes missing
-    assert t.read_pruned("id", 150, 160).count() >= 100 + 11
+    t.append(spark.range(0, 100, 1, 2).repartitionByRange(2, "id"), stats_cols=("id",))
+    t.append(spark.range(100, 200, 1, 2))
+    # a range inside the bounded snapshot keeps every unbounded row
+    pruned = t.read_pruned("id", 10, 20)
+    assert pruned.filter(F.col("id") >= 100).count() == 100
+    assert pruned.filter(F.col("id").between(10, 20)).count() == 11
+    assert len(t.prune_files("id", 10, 20)) == 3  # one bounded file pruned
+    # a range inside the unbounded snapshot is exact after the filter
     assert (
         t.read_pruned("id", 150, 160).filter(F.col("id").between(150, 160)).count()
         == 11
     )
-    # and a range inside the LEGACY data survives pruning of the new files
-    assert (
-        t.read_pruned("id", 10, 20).filter(F.col("id").between(10, 20)).count() == 11
-    )
+
+
+def test_full_copy_manifest_is_refused(spark, tmp_path):
+    """A manifest in the earlier layout (every entry copies the visible
+    ``dirs``/``files`` lists, no format marker) is refused loudly, naming
+    the table, instead of being misread on resume."""
+    path = str(tmp_path / "old")
+    os.makedirs(path)
+    legacy = {
+        "current": 1,
+        "snapshots": [
+            {"id": 1, "dirs": ["snap-00001"], "files": [], "lineage": {"wave": 0}}
+        ],
+    }
+    with open(os.path.join(path, "manifest.json"), "w") as f:
+        json.dump(legacy, f)
+    t = SnapshotTable(spark, path)
+    for call in (t.current_lineage, t.read, t.exists, lambda: t.append(spark.range(1))):
+        with pytest.raises(ValueError, match=re.escape(path)):
+            call()
+
+
+def test_manifest_grows_with_files_written(spark, tmp_path):
+    """Each entry records only the files its commit wrote, so 8x the
+    snapshots is about 8x the manifest — copying the visible file list
+    into every entry would grow it quadratically."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    sizes = {}
+    for i in range(64):
+        df = spark.range(4 * i, 4 * i + 4, 1, 4).withColumn("wave", F.lit(i))
+        t.append(df, lineage={"wave": i}, count_rows=True, stats_cols=("id",))
+        sizes[i + 1] = os.path.getsize(t._manifest_path)
+    assert len(t.current_files()) == 256
+    assert sizes[64] <= 10 * sizes[8], sizes
