@@ -2,7 +2,10 @@
 
 Modes:
   python bench_extra.py queries [name ...]   per-query first/steady noop times
-                                             (same methodology as bench.run_queries)
+                                             (same methodology as bench.run_queries),
+                                             plus the first build's Spark jobs
+                                             (build_jobs) and the persistent RDDs
+                                             its build and run left (pinned_rdds)
   python bench_extra.py plans <outdir> [name ...]
                                              dump .explain("formatted") per query
   python bench_extra.py wave <cpus> <n_urls> [repeats]
@@ -64,19 +67,34 @@ def mode_queries(names: list[str]) -> None:
     names = names or BENCH_QUERIES
     spark = _session()
     _warm(spark)
-    first, steady = {}, {}
+    sc = spark.sparkContext
+
+    def pinned():
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    first, steady, build_jobs, pinned_rdds = {}, {}, {}, {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+        sc.setJobDescription(f"bench_extra:{name}")
+        before = pinned()
         t0 = time.time()
-        cat[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        # the job group covers construction only: its jobs ran while the
+        # query was being built, not while it was executed
+        sc.setJobGroup(f"build:{name}", f"bench_extra:{name}")
+        df = cat[name](spark, SF_DIR)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.write.format("noop").mode("overwrite").save()
         first[name] = round(time.time() - t0, 3)
+        build_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"build:{name}"))
+        pinned_rdds[name] = len(pinned() - before)
         t0 = time.time()
         cat[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         steady[name] = round(time.time() - t0, 3)
-        print(f"# {name}: first={first[name]} steady={steady[name]}",
+        print(f"# {name}: first={first[name]} steady={steady[name]} "
+              f"build_jobs={build_jobs[name]} pinned_rdds={pinned_rdds[name]}",
               file=sys.stderr, flush=True)
     print(json.dumps({"cpu_probe_ms": _probe_ms(), "queries": first,
-                      "queries_steady": steady}))
+                      "queries_steady": steady, "build_jobs": build_jobs,
+                      "pinned_rdds": pinned_rdds}))
     spark.stop()
 
 

@@ -65,10 +65,9 @@ def portable_hash64(col: Column | str, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(src), 1, 15), 16, 10).cast("long")
 
 
-def portable_hash64_sql(expr: str, salt: str = "") -> str:
-    """DuckDB SQL mirror of portable_hash64."""
-    src = f"'{salt}' || {expr}" if salt else expr
-    return f"CAST(('0x' || substring(md5({src}), 1, 15)) AS BIGINT)"
+def portable_hash64_sql(expr: str) -> str:
+    """DuckDB SQL mirror of the unsalted portable_hash64."""
+    return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 def portable_hash64_py(s: str, salt: str = "") -> int:

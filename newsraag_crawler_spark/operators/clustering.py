@@ -63,7 +63,6 @@ def _kmeans_final(
     k: int = 4,
     iters: int = 2,
     dim: int = 64,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Lloyd's k-means over pre-quantized integer vectors, seeded from the
     k lowest ids, running ``iters`` assignment passes with centroid
@@ -72,16 +71,11 @@ def _kmeans_final(
     kmeans_centroids can recompute sums WITHOUT re-joining the input
     (kmeans_assign projects it away for its public (id, cluster) contract).
 
-    checkpoint=True materializes each iteration's k-row centroid table
-    with an eager localCheckpoint — the Lloyd-on-Spark shape (MLlib
-    collects centers per iteration for the same reason): lazily, iteration
-    i's plan NESTS every earlier iteration's subtree, so plan size grows
-    with iters and any consumer that references the result twice re-runs
-    the whole chain. Opt-in, not default, per the repo checkpoint rule
-    (dedup.ngram_jaccard_pairs): an eager default runs Spark jobs at
-    construction time and leaks never-released blocks into resident
-    drivers. One-shot callers (the bench query layer) pass True;
-    long-lived callers should materialize and release themselves.
+    The plan is fully lazy: iteration i's plan NESTS every earlier
+    iteration's subtree, so plan size grows with iters and a consumer that
+    references the result twice re-runs the whole chain — such a caller
+    materializes the result itself (the catalog's ivf_kmeans_topk
+    checkpoints kmeans_centroids' k rows).
 
     Out-of-spec inputs ERROR instead of silently drifting (r4 ADVICE):
     the int64 exactness of ``_dist_num`` needs |q| ≤ 2^13, per-cluster
@@ -163,8 +157,6 @@ def _kmeans_final(
 
     for _ in range(iters - 1):
         cent = update(assign(cent))
-        if checkpoint:
-            cent = cent.localCheckpoint(eager=True)  # k rows
     return assign(cent)
 
 
@@ -175,11 +167,8 @@ def kmeans_assign(
     k: int = 4,
     iters: int = 2,
     dim: int = 64,
-    checkpoint: bool = False,
 ) -> DataFrame:
-    final = _kmeans_final(
-        emb, id_col, qvec_col, k=k, iters=iters, dim=dim, checkpoint=checkpoint
-    )
+    final = _kmeans_final(emb, id_col, qvec_col, k=k, iters=iters, dim=dim)
     return final.select(F.col("_id").alias(id_col), F.col("cid").alias("cluster"))
 
 
@@ -190,41 +179,21 @@ def kmeans_centroids(
     k: int = 4,
     iters: int = 2,
     dim: int = 64,
-    checkpoint: bool = False,
-    checkpoint_iters: bool | None = None,
 ) -> DataFrame:
     """Trained centroids: the integer (sum vector, count) recomputed from
     the FINAL assignment of ``kmeans_assign`` — still never divided, so
     downstream consumers that are scale-invariant (cosine quantizers: the
     IVF coarse router) can use the sum vector directly as the centroid
-    direction with zero float drift. Returns (cid, svec array<long>, n).
-
-    checkpoint=True (see kmeans_assign) additionally materializes the
-    k-row OUTPUT: an IVF consumer broadcasts the codebook into both its
-    corpus-assignment and query-routing joins, and lazily each broadcast
-    re-runs the entire Lloyd chain (measured 2×; ivf_kmeans_topk steady
-    5.8 s → 4.4 s at sf0.1 with the checkpoint).
-
-    checkpoint_iters (default: follow ``checkpoint``) controls the PER-
-    ITERATION k-row checkpoints separately: each one is a full Spark
-    action whose Catalyst planning round costs more than it saves at
-    small ``iters`` — a one-shot iters≤2 caller wants the output
-    checkpoint only; deep-iteration callers keep both (plan nesting)."""
+    direction with zero float drift. Returns (cid, svec array<long>, n)."""
     # the final assignment already carries each point's quantized vector —
     # all k candidate copies are identical — so the sums are a straight
     # re-aggregation: no shuffle-join of the assignment back onto the
     # input table
-    final = _kmeans_final(
-        emb, id_col, qvec_col, k=k, iters=iters, dim=dim,
-        checkpoint=checkpoint if checkpoint_iters is None else checkpoint_iters,
-    )
-    cents = final.groupBy("cid").agg(
+    final = _kmeans_final(emb, id_col, qvec_col, k=k, iters=iters, dim=dim)
+    return final.groupBy("cid").agg(
         # same single-parse array-of-sums as update() (py4j-light)
         F.expr(
             "array(" + ", ".join(f"sum(_q[{i}])" for i in range(dim)) + ")"
         ).alias("svec"),
         F.count("*").alias("n"),
     )
-    if checkpoint:
-        cents = cents.localCheckpoint(eager=True)  # k rows
-    return cents

@@ -283,11 +283,11 @@ def _cuckoo_cols(key_col, n_buckets: int, n_shards: int):
 
 def build_cuckoo_shards(
     keys: DataFrame,
-    key: str = "key",
     n_shards: int = 64,
     n_buckets: int = 1 << 14,
 ) -> DataFrame:
-    """Per-shard (2,4)-cuckoo filter tables (uint16 fingerprints).
+    """Per-shard (2,4)-cuckoo filter tables (uint16 fingerprints) over the
+    ``key`` column.
 
     NOTE: the eviction chain needs a Python-side partner-bucket hash which
     cannot match the JVM b2 exactly, so PROBES check both candidate buckets
@@ -301,7 +301,7 @@ def build_cuckoo_shards(
         *(
             c.alias(n)
             for c, n in zip(
-                _cuckoo_cols(F.col(key), n_buckets, n_shards),
+                _cuckoo_cols(F.col("key"), n_buckets, n_shards),
                 ("fp", "b1", "b2", "shard_id"),
             )
         )
@@ -361,14 +361,13 @@ def build_cuckoo_shards(
 def probe_cuckoo(
     df: DataFrame,
     shards: DataFrame,
-    key: str = "key",
     n_shards: int = 64,
     n_buckets: int = 1 << 14,
 ) -> DataFrame:
-    """Add ``maybe_seen``: fingerprint present in either candidate bucket
-    (or the exact overflow list). Same join as probe_bloom (broadcast or
-    shuffled on shard id) with static-shift lane tests."""
-    fp, b1, b2, shard = _cuckoo_cols(F.col(key), n_buckets, n_shards)
+    """Add ``maybe_seen``: the ``key``'s fingerprint is present in either
+    candidate bucket (or the exact overflow list). Same join as probe_bloom
+    (broadcast or shuffled on shard id) with static-shift lane tests."""
+    fp, b1, b2, shard = _cuckoo_cols(F.col("key"), n_buckets, n_shards)
     probed = (
         df.withColumn("_fp", fp)
         .withColumn("_b1", b1)
@@ -452,16 +451,14 @@ def minhash_signature(shingle_col, num_hashes: int = 16) -> object:
     return F.aggregate(hs, init, step)
 
 
-def ngram_jaccard_pairs(
+def shingle_rows(
     df: DataFrame,
     id_col: str,
     shingle_col: str = "shingles",
-    threshold: float = 0.8,
     max_df: int | None = None,
-    checkpoint: bool = False,
 ) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs via explode + equi-join —
-    fully relational (scales: the join is on shingle, combiner-friendly).
+    """The shingle universe ngram_jaccard_pairs joins over: one (id_col, sh)
+    row per distinct shingle of each document.
 
     max_df caps hot shingles: a shingle shared by k docs yields k² candidate
     rows out of the equi-join, so boilerplate shingles ("click here to
@@ -470,46 +467,47 @@ def ngram_jaccard_pairs(
     intersection and set sizes — standard DF-filtered Jaccard), which bounds
     the join's per-key fan-out at max_df². Always set it for real corpora;
     None keeps exact textbook Jaccard for small/parity runs.
+    """
+    ex = df.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(F.col(shingle_col))).alias("sh"),
+    )
+    if max_df is None:
+        return ex
+    hot = (
+        ex.groupBy("sh")
+        .agg(F.count("*").alias("_df"))
+        .filter(F.col("_df") > max_df)
+        .select("sh")
+    )
+    return ex.join(hot, "sh", "left_anti")
+
+
+def ngram_jaccard_pairs(rows: DataFrame, id_col: str, threshold: float = 0.8) -> DataFrame:
+    """Exact n-gram Jaccard over candidate pairs via an equi-join on the
+    shingle — fully relational (scales: the join is on shingle, combiner-
+    friendly). ``rows`` is shingle_rows' (id_col, sh) table; it feeds the
+    size census and both self-join sides, so a caller that runs the result
+    once materializes ``rows`` first (lazily, the shingle regex + explode
+    re-execute per consumer — the catalog's dedup_ngram_jaccard
+    checkpoints it).
 
     Returns (id_a, id_b, jaccard) with jaccard >= threshold.
     """
-    ex = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array_distinct(F.col(shingle_col))).alias("sh"),
-    )
-    if max_df is not None:
-        hot = (
-            ex.groupBy("sh")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("sh")
-        )
-        ex = ex.join(hot, "sh", "left_anti")
-    # the DF-filtered shingle table feeds the size census AND both self-join
-    # sides — lazily, the shingle regex + explode (+ hot census + anti-join)
-    # re-execute per consumer (measured 2.4x the query wall time). The
-    # DEFAULT stays fully lazy (ADVICE r3: an eager default ran a Spark job
-    # at construction time and leaked never-released checkpoint blocks into
-    # resident drivers, and localCheckpoint data dies with an executor);
-    # checkpoint=True is the opt-in for one-shot callers (the bench query
-    # layer) — long-lived callers should materialize `ex` themselves (e.g.
-    # commit the shingle table) and control the release.
-    if checkpoint:
-        ex = ex.localCheckpoint(eager=True)
     # set sizes attach AFTER the pair aggregation: |pairs| ≪ |exploded
     # shingles|, so joining sizes onto the aggregated pairs (two broadcast
     # joins of a #docs-row dim) beats carrying na/nb on every exploded row
     # through the self-join exchanges — same jaccard, narrower shuffles
-    sizes = ex.groupBy("_id").agg(F.count("*").alias("_n"))
-    a = ex.select(F.col("_id").alias("id_a"), "sh")
-    b = ex.select(F.col("_id").alias("id_b"), "sh")
+    sizes = rows.groupBy(id_col).agg(F.count("*").alias("_n"))
+    a = rows.select(F.col(id_col).alias("id_a"), "sh")
+    b = rows.select(F.col(id_col).alias("id_b"), "sh")
     inter = (
         a.join(b, "sh")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared"))
-        .join(sizes.select(F.col("_id").alias("id_a"), F.col("_n").alias("na")), "id_a")
-        .join(sizes.select(F.col("_id").alias("id_b"), F.col("_n").alias("nb")), "id_b")
+        .join(sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("na")), "id_a")
+        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("nb")), "id_b")
     )
     return inter.select(
         "id_a",
@@ -572,31 +570,23 @@ def winnowing_fingerprints(
 
 
 def winnowing_pairs(
-    df: DataFrame,
+    fps: DataFrame,
     id_col: str,
-    text_col: str,
-    k: int = 3,
-    w: int = 4,
     min_shared: int = 2,
     max_df: int | None = None,
-    checkpoint: bool = False,
 ) -> DataFrame:
-    """Near-dup candidate pairs by shared winnowing fingerprints:
-    fingerprint equi-join (never all-pairs), count shared per pair,
-    threshold at min_shared. ``max_df`` drops boilerplate fingerprints
-    whose document frequency exceeds it — the same fan-out bound as
-    ngram_jaccard_pairs (a fingerprint shared by d docs costs d² join
-    rows). Returns (id_a, id_b, shared).
+    """Near-dup candidate pairs by shared winnowing fingerprints ``fps``
+    (winnowing_fingerprints' (id_col, fp) rows): fingerprint equi-join
+    (never all-pairs), count shared per pair, threshold at min_shared.
+    ``max_df`` drops boilerplate fingerprints whose document frequency
+    exceeds it — the same fan-out bound as shingle_rows (a fingerprint
+    shared by d docs costs d² join rows). Returns (id_a, id_b, shared).
 
-    checkpoint=True materializes the fingerprint table once (the same
-    opt-in rule as ngram_jaccard_pairs): lazily, the hot-fp census and the
-    two self-join sides each re-run the shingle→md5→window subtree. One-
-    shot callers (the bench query layer) pass True; long-lived callers
-    should commit the fingerprints themselves and control the release.
+    ``fps`` feeds the hot-fp census and both self-join sides, so a caller
+    that runs the result once materializes it first (lazily, each consumer
+    re-runs the shingle→md5→window subtree — the catalog's dedup_winnowing
+    checkpoints it).
     """
-    fps = winnowing_fingerprints(df, id_col, text_col, k=k, w=w)
-    if checkpoint:
-        fps = fps.localCheckpoint(eager=True)
     if max_df is not None:
         hot = (
             fps.groupBy("fp")

@@ -46,13 +46,15 @@ def dedup_key_col(url_col, canonical: bool):
     return surt_url(url_col) if canonical else F.trim(url_col)
 
 
+_MAX_FIXPOINT_ITERS = 10  # runaway bound; parity fixtures need 1-2 passes
+
+
 def reference_schedule(
     candidates: DataFrame,
     sources: DataFrame,
     seen: DataFrame | None,
     canonical: bool = False,
     min_content_len: int = MIN_CONTENT_LEN,
-    max_fixpoint_iters: int = 10,
 ) -> ScheduleResult:
     """Equivalence-mode schedule for one wave.
 
@@ -93,7 +95,7 @@ def reference_schedule(
     active = valid.localCheckpoint()
     attempted = None
     passes = 0
-    for _ in range(max_fixpoint_iters):
+    for _ in range(_MAX_FIXPOINT_ITERS):
         passes += 1
         winners = (
             active.withColumn("_rn", F.row_number().over(w_key))

@@ -107,20 +107,16 @@ def split_wave(budgeted: DataFrame) -> tuple[DataFrame, DataFrame]:
 # bodies, so stripping is lossless), unlike the r4 '@'-sentinel, which a
 # webmaster email in a comment silently truncated (r4 ADVICE).
 _UA_SENTINEL = "\x01"
+_ROBOTS_DEFAULT_DELAY_S = 1.0  # the DuckDB mirror hard-codes the same 1.0
 
 
-def parse_robots(
-    bodies: DataFrame,
-    host_col: str = "host",
-    body_col: str = "robots_txt",
-    default_delay_s: float = 1.0,
-) -> DataFrame:
+def parse_robots(bodies: DataFrame, body_col: str = "robots_txt") -> DataFrame:
     """robots.txt bodies → per-host policy columns, fully relational.
 
     Honors the wildcard ``User-agent: *`` group: its ``Disallow:``
     prefixes (empty value = allow-all, per the de-facto standard) and
-    ``Crawl-delay:`` (falls back to default_delay_s). A missing body or a
-    body without a ``*`` group yields allow-all + default delay — crawl
+    ``Crawl-delay:`` (falls back to 1.0 s). A missing body or a body
+    without a ``*`` group yields allow-all + default delay — crawl
     conservatively only when told to. ``#``-comments are stripped per the
     original robots.txt spec (so a comment containing 'User-agent:' text
     or a stray sentinel byte can't corrupt section extraction), and a
@@ -144,8 +140,8 @@ def parse_robots(
     delay_raw = F.regexp_extract(section, r"(?i)Crawl-delay\s*:[ \t]*([0-9.]+)", 1)
     delay = F.when(
         delay_raw.rlike(r"^[0-9]+(\.[0-9]+)?$"),
-        F.coalesce(delay_raw.cast("double"), F.lit(default_delay_s)),
-    ).otherwise(F.lit(default_delay_s))
+        F.coalesce(delay_raw.cast("double"), F.lit(_ROBOTS_DEFAULT_DELAY_S)),
+    ).otherwise(F.lit(_ROBOTS_DEFAULT_DELAY_S))
     return bodies.withColumn("robots_disallow", disallow).withColumn(
         "crawl_delay_s", delay
     )

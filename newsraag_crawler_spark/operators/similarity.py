@@ -24,6 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+ID_COL, VEC_COL = "vec_id", "embedding"  # corpus rows
+QID_COL, QVEC_COL = "query_id", "query_vec"  # query rows
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -50,10 +53,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
     max_queries: int = 10_000,
 ) -> DataFrame:
     """Exact top-k neighbors per query (brute force, broadcast queries).
@@ -75,11 +74,11 @@ def cosine_topk(
         )
     joined = corpus.crossJoin(F.broadcast(queries))
     scored = joined.select(
-        F.col(qid_col),
-        F.col(id_col),
-        cosine_sim(F.col(vec_col), F.col(qvec_col)).alias("cosine"),
+        F.col(QID_COL),
+        F.col(ID_COL),
+        cosine_sim(F.col(VEC_COL), F.col(QVEC_COL)).alias("cosine"),
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy(QID_COL).orderBy(F.col("cosine").desc(), F.col(ID_COL))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -178,26 +177,22 @@ def srp_topk(
     k: int = 10,
     n_bits: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
 ) -> DataFrame:
     """Oracle-checkable approximate top-k: SRP buckets, multi-probe (exact
     bucket + 1-bit flips = Hamming ≤ 1 candidates), exact cosine on
     candidates. A bucket equi-join, never a cross product against the
     corpus.
 
-    Query ids (``qid_col``) and corpus ids (``id_col``) must each be unique:
+    Query ids (``query_id``) and corpus ids (``vec_id``) must each be unique:
     candidates are not de-duplicated, so a repeated id yields repeated
     (query, vec) rows in the top-k window.
     """
-    c = corpus.withColumn("bucket", srp_bucket(F.col(vec_col), dim, n_bits))
-    q = queries.withColumn("_qb", srp_bucket(F.col(qvec_col), dim, n_bits))
+    c = corpus.withColumn("bucket", srp_bucket(F.col(VEC_COL), dim, n_bits))
+    q = queries.withColumn("_qb", srp_bucket(F.col(QVEC_COL), dim, n_bits))
     probes = F.array(
         F.col("_qb"), *[F.col("_qb").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)]
     )
-    q = q.select(qid_col, qvec_col, F.explode(probes).alias("bucket"))
+    q = q.select(QID_COL, QVEC_COL, F.explode(probes).alias("bucket"))
     cand = c.join(F.broadcast(q), "bucket")
     # no dedup needed: each corpus vector has exactly ONE bucket and the
     # n_bits+1 probe values per query are pairwise distinct (identity +
@@ -205,11 +200,11 @@ def srp_topk(
     # row — the former dropDuplicates was a semantically dead exchange
     # (guide §2.4; the DuckDB mirror has no DISTINCT either)
     scored = cand.select(
-        F.col(qid_col),
-        F.col(id_col),
-        cosine_sim(F.col(vec_col), F.col(qvec_col)).alias("cosine"),
+        F.col(QID_COL),
+        F.col(ID_COL),
+        cosine_sim(F.col(VEC_COL), F.col(QVEC_COL)).alias("cosine"),
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy(QID_COL).orderBy(F.col("cosine").desc(), F.col(ID_COL))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
@@ -219,10 +214,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the second scale path next to
@@ -246,14 +237,14 @@ def ivf_topk(
     tiebreak so a sub-1e-6 floating-point residue can't flip an assignment
     between engines.
 
-    Query ids (``qid_col``) and corpus ids (``id_col``) must each be unique:
+    Query ids (``query_id``) and corpus ids (``vec_id``) must each be unique:
     candidates are not de-duplicated, so a repeated id yields repeated
     (query, vec) rows in the top-k window.
     """
     if centroids is None:
         centroids = (
-            corpus.filter(F.col(id_col) < n_cells)
-            .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"))
+            corpus.filter(F.col(ID_COL) < n_cells)
+            .select(F.col(ID_COL).alias("cell"), F.col(VEC_COL).alias("cvec"))
         )
     # one row: array of (cell, cvec, |cvec|) sorted by cell id — the whole
     # quantizer codebook crosses the wire once per task, not once per row
@@ -274,7 +265,7 @@ def ivf_topk(
             F.col("_cents"),
             lambda c: F.struct(
                 F.round(
-                    _dot(F.col(vec_col), c["cvec"])
+                    _dot(F.col(VEC_COL), c["cvec"])
                     / (F.col("_vnorm") * c["cnorm"]),
                     6,
                 ).alias("c"),
@@ -288,23 +279,23 @@ def ivf_topk(
     # expression into that predicate and evaluate it twice more per row
     assigned = (
         corpus.crossJoin(F.broadcast(cent_row))
-        .withColumn("_vnorm", _norm(F.col(vec_col)))
+        .withColumn("_vnorm", _norm(F.col(VEC_COL)))
         .withColumn("cell", F.coalesce(-best["nc"], F.lit(-1)))
-        .select(id_col, vec_col, "cell")
+        .select(ID_COL, VEC_COL, "cell")
     )
-    w_probe = Window.partitionBy(qid_col).orderBy(
+    w_probe = Window.partitionBy(QID_COL).orderBy(
         F.round(F.col("_qcos"), 6).desc(), F.col("cell")
     )
     probes = (
         queries.crossJoin(F.broadcast(centroids))
-        .withColumn("_qcos", cosine_sim(F.col(qvec_col), F.col("cvec")))
+        .withColumn("_qcos", cosine_sim(F.col(QVEC_COL), F.col("cvec")))
         .withColumn("_qr", F.row_number().over(w_probe))
         .filter(F.col("_qr") <= n_probe)
         # identity coalesce: strips the `cell < n_cells` constraint inherited
         # from the centroid filter — otherwise constraint propagation pushes
         # `cell < n_cells` onto the corpus side, substituting (and
         # re-evaluating) the full argmax expression inside the join condition
-        .select(qid_col, qvec_col, F.coalesce(F.col("cell"), F.lit(-1)).alias("cell"))
+        .select(QID_COL, QVEC_COL, F.coalesce(F.col("cell"), F.lit(-1)).alias("cell"))
     )
     cand = assigned.join(F.broadcast(probes), "cell")
     # cells PARTITION the corpus (each vector is assigned exactly one cell)
@@ -313,9 +304,9 @@ def ivf_topk(
     # the former dropDuplicates was a semantically dead exchange (guide
     # §2.4; the DuckDB mirror joins without DISTINCT)
     scored = cand.select(
-        F.col(qid_col),
-        F.col(id_col),
-        cosine_sim(F.col(vec_col), F.col(qvec_col)).alias("cosine"),
+        F.col(QID_COL),
+        F.col(ID_COL),
+        cosine_sim(F.col(VEC_COL), F.col(QVEC_COL)).alias("cosine"),
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy(QID_COL).orderBy(F.col("cosine").desc(), F.col(ID_COL))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

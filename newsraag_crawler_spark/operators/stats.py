@@ -40,11 +40,10 @@ def cycle_stats(attempted: DataFrame) -> DataFrame:
     )
 
 
-def dup_detector_stats(
-    checks: DataFrame, key: str = "key", group: str = "source_id"
-) -> DataFrame:
+def dup_detector_stats(checks: DataFrame) -> DataFrame:
     """A6 dup-detector stats (reference duplicate_detector.py:68-97):
-    cache hits/misses, hit-rate and duplicate-rate per group + rollup line.
+    cache hits/misses, hit-rate and duplicate-rate per source + rollup line.
+    checks must carry (source_id, key).
 
     A 'hit' is any check whose key was already checked — in a set-semantics
     world that is total_checks − distinct_keys (order-free, so it
@@ -61,10 +60,10 @@ def dup_detector_stats(
         )
 
     return (
-        checks.rollup(group)
+        checks.rollup("source_id")
         .agg(
             F.count("*").alias("total_checks"),
-            F.countDistinct(key).alias("cache_misses"),
+            F.countDistinct("key").alias("cache_misses"),
         )
         .withColumn("cache_hits", F.col("total_checks") - F.col("cache_misses"))
         .withColumn("duplicates_found", F.col("cache_hits"))
@@ -177,28 +176,30 @@ def token_budget_gate(
     )
 
 
+TREND_QSCALE = 1e10  # trend_window's quantization grid (the oracle's 1e10)
+
+
 def trend_window(
     df: DataFrame,
     order_col: str,
     value_col: str,
     partition_col: str | None = None,
-    qscale: float = 1e10,
 ) -> DataFrame:
     """A8 memory-trend frames: avg(last 5) vs avg(prev 5) growth ratio
     (reference memory_optimizer.py:97-122).
 
     Cross-engine-exact construction (r5; see operators/clustering.py for
-    the pattern): values are quantized once with floor(v·qscale) — one
+    the pattern): values are quantized once with floor(v·TREND_QSCALE) — one
     agreed IEEE multiply, exact floor — window sums run in int64 (order-
     free), and each output is ONE IEEE division of integer-agreed operands,
     so the result is bit-identical in any engine. The r4 float/decimal
     version flipped round-boundary rows between Spark and DuckDB at sf0.1.
-    Caller must size qscale so |v|·qscale·5 stays within int64 (and within
-    2^53 for exact int→double products — ample for metric-series values).
+    |v|·TREND_QSCALE·5 must stay within int64 (and within 2^53 for exact
+    int→double products — ample for metric-series values).
 
     Adds: recent_avg, growth_ratio (1.0 while the prev window is empty,
     NULL if the prev window sums to exactly zero)."""
-    vi = F.floor(F.col(value_col) * F.lit(qscale)).cast("long")
+    vi = F.floor(F.col(value_col) * F.lit(TREND_QSCALE)).cast("long")
     w = (
         Window.partitionBy(partition_col).orderBy(order_col)
         if partition_col is not None
@@ -207,7 +208,7 @@ def trend_window(
     w5, wp = w.rowsBetween(-4, 0), w.rowsBetween(-9, -5)
     rs, rc = F.sum(vi).over(w5), F.count(F.lit(1)).over(w5)
     ps, pc = F.sum(vi).over(wp), F.count(F.lit(1)).over(wp)
-    recent_avg = rs.cast("double") / (rc.cast("double") * F.lit(qscale))
+    recent_avg = rs.cast("double") / (rc.cast("double") * F.lit(TREND_QSCALE))
     growth = (
         F.when(pc == 0, F.lit(1.0))
         .when(ps == 0, F.lit(None).cast("double"))

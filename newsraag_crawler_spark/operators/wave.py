@@ -161,15 +161,9 @@ SKIP_URL_RE = "/(search|tag|category|login)/|\\.(jpg|png|gif|css|js)$|/api/"
 KEEP_URL_RE = "/(news|article|story|docs)/|/20[0-9]{2}/"
 
 
-def discover_links(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    max_links: int = 20,
-    classify: bool = True,
-) -> DataFrame:
-    """S6 HTML index scan (reference html_template.py:92-156): fetched pages
-    → candidate article links, as one relational pipeline:
+def discover_links(pages: DataFrame, max_links: int = 20) -> DataFrame:
+    """S6 HTML index scan (reference html_template.py:92-156): fetched
+    (url, html) pages → candidate article links, as one relational pipeline:
 
         regexp_extract_all hrefs (document order preserved via posexplode)
         → resolve relative hrefs against the page URL (C1, Arrow-batched
@@ -186,10 +180,10 @@ def discover_links(
     from ..functions.urlnorm import resolve_urls
 
     hrefs = F.regexp_extract_all(
-        F.col(html_col), F.lit('(?i)<a[^>]*href="([^"]+)"'), F.lit(1)
+        F.col("html"), F.lit('(?i)<a[^>]*href="([^"]+)"'), F.lit(1)
     )
     exploded = pages.select(
-        F.col(url_col).alias("page_url"),
+        F.col("url").alias("page_url"),
         F.posexplode(hrefs).alias("link_pos", "href"),
     )
     resolved = exploded.withColumn(
@@ -206,11 +200,9 @@ def discover_links(
         F.row_number().over(
             Window.partitionBy("page_url", "link").orderBy("link_pos")
         ),
-    ).filter(F.col("_rn") == 1)
-    if classify:
-        first = first.filter(
-            ~F.col("link").rlike(SKIP_URL_RE) & F.col("link").rlike(KEEP_URL_RE)
-        )
+    ).filter(F.col("_rn") == 1).filter(
+        ~F.col("link").rlike(SKIP_URL_RE) & F.col("link").rlike(KEEP_URL_RE)
+    )
     capped = first.withColumn(
         "_k",
         F.row_number().over(Window.partitionBy("page_url").orderBy("link_pos")),
@@ -225,7 +217,6 @@ def run_equivalence_cycle(
     corpus_table,
     wave: int,
     seed: int = 42,
-    canonical: bool = False,
 ) -> ScheduleResult:
     """One reference-equivalent cycle with snapshot commits.
 
@@ -234,7 +225,7 @@ def run_equivalence_cycle(
     """
     seen_df = seen_table.read() if seen_table is not None and seen_table.exists() else None
     sched = reference_schedule(
-        candidates.filter(F.col("wave") == wave), sources, seen_df, canonical
+        candidates.filter(F.col("wave") == wave), sources, seen_df
     )
     corpus = fetch_images(sched.fetched, seed=seed, wave=wave)
     if corpus_table is not None:

@@ -16,6 +16,10 @@ SYNTHESIZED deterministically from the driver's `documents` table with pure
 column expressions that both engines evaluate identically — no external
 data (BASELINE.json input_hint is covered separately by entry()/pytest,
 which carry real image payloads).
+
+Operators take no checkpoint option: a query whose frame feeds several
+consumers checkpoints that frame itself, and only where a measured A/B
+shows the checkpoint pays (the comment at each ``localCheckpoint`` gives it).
 """
 
 from __future__ import annotations
@@ -458,19 +462,17 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard ≥ 0.9 pairs via explode + equi-join, with the
     document-frequency cap on (the scale path); the oracle applies the
     identical cap."""
-    from .operators.dedup import ngram_jaccard_pairs
+    from .operators.dedup import ngram_jaccard_pairs, shingle_rows
 
     # two-step shingling (text.split_words): words materialize once per row
     d = _cloned_docs_spark(spark, sf_dir).select(
         "doc_id", T.split_words("text").alias("_w")
     ).withColumn("shingles", T.shingles_from_words("_w", 3))
-    # checkpoint=True: one-shot query-layer call — the shingle table feeds
-    # three consumers and would re-execute per consumer lazily (2.4x); the
-    # operator DEFAULT is lazy so constructing it never runs a job
-    pairs = ngram_jaccard_pairs(
-        d, "doc_id", "shingles", threshold=0.9, max_df=_JACCARD_MAX_DF,
-        checkpoint=True,
-    )
+    # materialize ONCE: the capped shingle rows feed the size census and both
+    # self-join sides (steady at sf0.1, local[4]: faster than lazy in 4 of 5
+    # pairs, min 3.57 s vs 3.75 s; BENCH/NOTES.md)
+    rows = shingle_rows(d, "doc_id", max_df=_JACCARD_MAX_DF).localCheckpoint(eager=True)
+    pairs = ngram_jaccard_pairs(rows, "doc_id", threshold=0.9)
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
 
@@ -504,15 +506,16 @@ def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     minima), so the candidate join touches a fraction of the Jaccard
     shingle volume while guaranteeing any shared w+k-1-word run still
     collides. Oracle replays the identical window-min selection in SQL."""
-    from .operators.dedup import winnowing_pairs
+    from .operators.dedup import winnowing_fingerprints, winnowing_pairs
 
     d = _cloned_docs_spark(spark, sf_dir)
-    # checkpoint=True: one-shot query-layer call — the fingerprint table
-    # feeds the hot census and both self-join sides (same opt-in rule as
-    # dedup_ngram_jaccard); lazily each consumer re-ran the md5+window tree
+    # materialize ONCE: the fingerprints feed the hot census and both
+    # self-join sides (steady min of 5 at sf0.1, local[4]: 2.40 s vs 3.06 s
+    # lazy; BENCH/NOTES.md)
+    fps = winnowing_fingerprints(d, "doc_id", "text", k=3, w=_WINNOW_W)
     return winnowing_pairs(
-        d, "doc_id", "text", k=3, w=_WINNOW_W,
-        min_shared=_WINNOW_MIN_SHARED, max_df=_WINNOW_MAX_DF, checkpoint=True,
+        fps.localCheckpoint(eager=True), "doc_id",
+        min_shared=_WINNOW_MIN_SHARED, max_df=_WINNOW_MAX_DF,
     )
 
 
@@ -774,8 +777,7 @@ def q_bloom_seen_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain NOT EXISTS, so the gate proves Bloom exactness."""
     from .operators.dedup import build_bloom_shards, seen_filter_two_phase
 
-    # materialize the keyed frontier ONCE (eager checkpoint, one-shot query
-    # layer — same opt-in rule as dedup_ngram_jaccard): it feeds four
+    # materialize the keyed frontier ONCE (eager checkpoint): it feeds four
     # subtrees (shard build, probe, confirm, final anti-join) and lazily
     # each re-ran the URL synthesis + SURT regex chain (A/B: steady 1.35 s
     # lazy vs 1.0 s checkpointed; a round-robin spread instead measured
@@ -1665,10 +1667,13 @@ FROM (SELECT doc_id, 'h' || (doc_id % 7)::VARCHAR || '.example.com' AS host
 """
 
 
-def q_rss_items(spark: SparkSession, sf_dir: str, max_items: int = 2) -> DataFrame:
+_RSS_MAX_ITEMS = 2
+
+
+def q_rss_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3/S4 + P1/P2 + C6: multi-item RSS scan — every <item> of every
     feed-shaped page becomes a row (reference yields each entry,
-    `rss_template.py:93-129`), capped at entries[:max_items]
+    `rss_template.py:93-129`), capped at entries[:_RSS_MAX_ITEMS]
     (`rss_extractor.py:56` — the cap binds: feeds carry up to 3 items).
     Per-entry projection: title/link/author/category (P1) — author falls
     back to <dc:creator> and may be NULL (``entry.get('author',
@@ -1693,7 +1698,7 @@ def q_rss_items(spark: SparkSession, sf_dir: str, max_items: int = 2) -> DataFra
         F.posexplode(
             F.regexp_extract_all("xml", F.lit(_ITEM_BLOCK), F.lit(1))
         ).alias("item_rank", "item_xml"),
-    ).filter(F.col("item_rank") < max_items)
+    ).filter(F.col("item_rank") < _RSS_MAX_ITEMS)
     title = F.regexp_extract("item_xml", _ITEM_TITLE, 1)
     pub = F.regexp_extract("item_xml", _ITEM_PUBDATE, 1)
     st = structured_ts(pub)
@@ -1739,7 +1744,7 @@ rss AS (
   FROM feeds WHERE regexp_matches(raw, '{_RSS_SHAPE}')),
 ex AS (SELECT feed_id, regexp_extract_all(xml, '{_ITEM_BLOCK}', 1) AS items FROM rss),
 it AS (SELECT feed_id, k::INT AS item_rank, items[k + 1] AS item_xml
-       FROM ex, unnest(range(0, least(len(items), 2))) AS t(k))
+       FROM ex, unnest(range(0, least(len(items), {_RSS_MAX_ITEMS}))) AS t(k))
 SELECT feed_id, item_rank, {title} AS title,
   regexp_extract(item_xml, '{_ITEM_LINK}', 1) AS link,
   COALESCE(NULLIF(regexp_extract(item_xml, '{_ITEM_AUTHOR}', 1), ''),
@@ -2356,12 +2361,12 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     train = _spread(raw).select("vec_id", quantize_vec("embedding").alias("qvec"))
-    # checkpoint=True: one-shot query-layer call — ivf_topk broadcasts the
-    # codebook into BOTH its corpus-assignment and query-routing joins, and
-    # lazily each broadcast re-runs the whole Lloyd chain (steady 5.8 s →
-    # 4.4 s at sf0.1 with the k-row materialization)
-    cents = kmeans_centroids(
-        train, k=16, iters=2, dim=64, checkpoint=True, checkpoint_iters=False,
+    # materialize the k-row codebook ONCE: ivf_topk broadcasts it into BOTH
+    # its corpus-assignment and query-routing joins, and lazily each
+    # broadcast re-runs the whole Lloyd chain (steady min of 5 at sf0.1,
+    # local[4]: 3.92 s vs 4.84 s lazy; BENCH/NOTES.md)
+    cents = kmeans_centroids(train, k=16, iters=2, dim=64).localCheckpoint(
+        eager=True
     ).select(
         F.col("cid").alias("cell"),
         F.transform("svec", lambda s: s.cast("double")).alias("cvec"),
@@ -2420,9 +2425,11 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet")).select(
         "vec_id", quantize_vec("embedding").alias("qvec")
     )
-    # checkpoint=True: one-shot query-layer call (same opt-in rule as
-    # dedup_ngram_jaccard) — materializes each iteration's k-row centroids
-    return kmeans_assign(emb, "vec_id", "qvec", k=4, iters=2, dim=64, checkpoint=True)
+    # not checkpointed: per-iteration k-row checkpoints measured no faster
+    # (steady median of 10 pairs at sf0.1, local[4]: 1.55 s with, 1.50 s
+    # without; BENCH/NOTES.md) and ran six Spark jobs while the query was
+    # being built
+    return kmeans_assign(emb, "vec_id", "qvec", k=4, iters=2, dim=64)
 
 
 def _sql_kmeans_ctes(k: int) -> str:

@@ -173,7 +173,7 @@ def fetch_payload_py(url: str, source_name: str, seed: int = 42) -> dict:
 EMB_DIM = 16
 
 
-def synth_embedding(image_id: str, dim: int = EMB_DIM) -> list[float]:
+def synth_embedding(image_id: str) -> list[float]:
     """Deterministic per-document embedding seeded from image_id — the stub
     for the reference's 3072-d Azure-OpenAI vector stored per point
     (`/root/reference/clients/qdrant_client.py:130-136`; SURVEY.md §1.1
@@ -190,7 +190,7 @@ def synth_embedding(image_id: str, dim: int = EMB_DIM) -> list[float]:
                 / 1000.0
             )
         )
-        for j in range(dim)
+        for j in range(EMB_DIM)
     ]
 
 

@@ -24,8 +24,8 @@ an atomically-replaced JSON manifest:
   like Iceberg, a commit reuses its parent's file list instead of copying
   it, so the manifest grows with the files written, not with
   waves x files. ``append`` extends the current snapshot; ``overwrite``
-  (used by the compacted ``seen`` table) and ``delete_where`` start a new
-  chain (``parent`` 0).
+  (run_crawl commits each wave's ``frontier`` this way; ``seen`` is
+  append-only) and ``delete_where`` start a new chain (``parent`` 0).
 - Readers read ONLY directories on the manifest's chain — a crashed
   half-written snapshot directory is invisible, so commits are atomic
   (write dir → fsync manifest.tmp → os.replace). ``read(version=...)`` is

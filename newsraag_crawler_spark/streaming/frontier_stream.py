@@ -63,11 +63,11 @@ def dedup_stream(frontier: DataFrame, watermark: str = "1 hour") -> DataFrame:
     ).dropDuplicatesWithinWatermark(["surt_url"])
 
 
-def windowed_host_metrics(frontier: DataFrame, window: str = "1 minute") -> DataFrame:
-    """Tumbling-window per-host discovery counts (A5-style rollup)."""
+def windowed_host_metrics(frontier: DataFrame) -> DataFrame:
+    """One-minute tumbling-window per-host discovery counts (A5-style rollup)."""
     return (
         frontier.withWatermark("discovered_at", "2 minutes")
-        .groupBy(F.window("discovered_at", window).alias("win"), "host")
+        .groupBy(F.window("discovered_at", "1 minute").alias("win"), "host")
         .agg(F.count("*").alias("discovered"))
         .select(F.col("win.start").alias("window_start"), "host", "discovered")
     )

@@ -52,17 +52,12 @@ _STATE = StructType(
 )
 
 
-def rate_limit_stream(
-    frontier: DataFrame,
-    delay_s: float = 1.0,
-    host_col: str = "host",
-    ts_col: str = "discovered_at",
-) -> DataFrame:
+def rate_limit_stream(frontier: DataFrame, delay_s: float = 1.0) -> DataFrame:
     """Assign each streamed URL a politeness slot >= delay_s after the
     host's previous slot, with the bucket persisted across micro-batches.
 
     frontier must carry (host, url, feed_rank, discovered_at). Rows within
-    a batch are ordered deterministically by (ts, feed_rank, url).
+    a batch are ordered deterministically by (discovered_at, feed_rank, url).
     """
 
     def _bucket(
@@ -78,9 +73,9 @@ def rate_limit_stream(
         parts = [pdf for pdf in pdfs if not pdf.empty]
         if parts:
             pdf = pd.concat(parts, ignore_index=True).sort_values(
-                [ts_col, "feed_rank", "url"], kind="stable"
+                ["discovered_at", "feed_rank", "url"], kind="stable"
             ).reset_index(drop=True)
-            t = pdf[ts_col].astype("int64").to_numpy() / 1e9
+            t = pdf["discovered_at"].astype("int64").to_numpy() / 1e9
             n = len(t)
             # closed form of sched_i = max(t_i, sched_{i-1} + delay) with
             # sched_0 >= next_free:  sched_i = delay*i + cummax_j(t_j -
@@ -112,7 +107,7 @@ def rate_limit_stream(
             )
         state.update((next_free if next_free > float("-inf") else 0.0, served))
 
-    return frontier.groupBy(host_col).applyInPandasWithState(
+    return frontier.groupBy("host").applyInPandasWithState(
         _bucket,
         RATE_LIMIT_OUTPUT,
         _STATE,

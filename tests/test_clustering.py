@@ -96,18 +96,16 @@ def test_centroids_match_final_assignment_sums(spark):
         assert svec == expect
 
 
-def test_checkpoint_opt_in_is_result_invariant(spark):
-    """checkpoint=True is a pure materialization hint (per-iteration k-row
-    localCheckpoints): assignments AND trained centroids must be
-    bit-identical to the fully-lazy plan."""
-    from newsraag_crawler_spark.operators.clustering import kmeans_centroids
+def test_kmeans_clusters_pins_no_blocks(spark):
+    """Building and running the catalog's kmeans_clusters query twice leaves
+    the session's persistent-RDD set as it was: no checkpoint block is
+    pinned per build."""
+    from newsraag_crawler_spark.queries import q_kmeans_clusters
 
-    emb = _emb(spark)
-    lazy = kmeans_assign(emb, "vec_id", "qvec", k=4, iters=2, dim=64)
-    ckpt = kmeans_assign(emb, "vec_id", "qvec", k=4, iters=2, dim=64, checkpoint=True)
-    assert sorted(map(tuple, lazy.collect())) == sorted(map(tuple, ckpt.collect()))
-    c_lazy = kmeans_centroids(emb, "vec_id", "qvec", k=4, iters=2, dim=64)
-    c_ckpt = kmeans_centroids(
-        emb, "vec_id", "qvec", k=4, iters=2, dim=64, checkpoint=True
-    )
-    assert sorted(map(tuple, c_lazy.collect())) == sorted(map(tuple, c_ckpt.collect()))
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = pinned()
+    for _ in range(2):
+        q_kmeans_clusters(spark, SF).collect()
+    assert pinned() == before

@@ -151,8 +151,12 @@ def test_jaccard_hot_shingle_cap_bounds_candidates(spark):
              (101, ["x y z", "p q r", "s t u", "different tail here"])]
     df = spark.createDataFrame(rows, ["doc_id", "shingles"])
 
-    uncapped = dedup.ngram_jaccard_pairs(df, "doc_id", threshold=0.1)
-    capped = dedup.ngram_jaccard_pairs(df, "doc_id", threshold=0.1, max_df=5)
+    uncapped = dedup.ngram_jaccard_pairs(
+        dedup.shingle_rows(df, "doc_id"), "doc_id", threshold=0.1
+    )
+    capped = dedup.ngram_jaccard_pairs(
+        dedup.shingle_rows(df, "doc_id", max_df=5), "doc_id", threshold=0.1
+    )
     # without the cap every doc pairs with every other through the boilerplate
     assert uncapped.count() > 800
     got = {(r.id_a, r.id_b): r.jaccard for r in capped.collect()}
@@ -189,7 +193,7 @@ def test_winnowing_guarantee_and_sketch_size(spark):
     assert by_doc[0] == by_doc[3]
     assert not (by_doc[0] & by_doc[2]) and not (by_doc[1] & by_doc[2])
     pairs = {(r.id_a, r.id_b) for r in dedup.winnowing_pairs(
-        df, "doc_id", "text", k=3, w=4, min_shared=1).collect()}
+        fps, "doc_id", min_shared=1).collect()}
     assert (0, 3) in pairs and (0, 1) in pairs and not any(2 in p for p in pairs)
 
 

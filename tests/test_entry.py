@@ -30,7 +30,10 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf[c].dtype == object or str(pdf[c].dtype).startswith("datetime"):
             pdf[c] = pdf[c].astype(str)
         else:
-            pdf[c] = pd.to_numeric(pdf[c], errors="ignore")
+            try:
+                pdf[c] = pd.to_numeric(pdf[c])
+            except (ValueError, TypeError):
+                pass  # keep the column as it is
     pdf = pdf.sort_values(by=list(pdf.columns), na_position="first").reset_index(
         drop=True
     )

@@ -325,3 +325,32 @@ def test_probe_plans_have_no_python_at_any_size(spark, monkeypatch):
     for df in probes:
         p = _plan(df)
         assert "FlatMapCoGroupsInPandas" not in p and "ArrowEvalPython" not in p, p
+
+
+def test_shared_frame_operators_build_without_jobs(spark):
+    """The operators whose input feeds several consumers stay lazy: building
+    them over small local frames starts no Spark job (a caller that wants
+    the shared frame materialized checkpoints it itself)."""
+    from newsraag_crawler_spark.operators import clustering, dedup
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g")], ["doc_id", "text"]
+    )
+    shingles = spark.createDataFrame(
+        [(1, ["a b c", "b c d"]), (2, ["a b c", "c d e"])], ["doc_id", "shingles"]
+    )
+    emb = spark.createDataFrame(
+        [(i, [i, -i, 2 * i]) for i in range(8)], "vec_id long, qvec array<long>"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("build_only", "operator construction")
+    try:
+        dedup.ngram_jaccard_pairs(dedup.shingle_rows(shingles, "doc_id", max_df=5), "doc_id")
+        dedup.winnowing_pairs(
+            dedup.winnowing_fingerprints(docs, "doc_id", "text"), "doc_id", max_df=5
+        )
+        clustering.kmeans_assign(emb, k=2, iters=3, dim=3)
+        clustering.kmeans_centroids(emb, k=2, iters=3, dim=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("build_only")) == []

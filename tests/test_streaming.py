@@ -81,6 +81,61 @@ def test_windowed_host_metrics(spark, dirs):
     assert rows == {"h0.example.com": 10, "h1.example.com": 10}
 
 
+def test_dedup_stream_drops_duplicates_within_watermark(spark, dirs):
+    """§2.10 in-stream seen set: a second URL with the same SURT key inside
+    the 1-hour watermark is dropped; once the watermark has passed the
+    key's first sighting (and a later micro-batch evicted its state), a
+    re-discovery of the key passes the streaming stage again."""
+    import datetime as dt
+
+    input_dir, _, _ = dirs
+    base = dt.datetime(2026, 1, 1, 0, 0, 0)
+    # one file per micro-batch: the key, its SURT duplicate 10 s later and
+    # an unrelated key; a watermark advancer 3 h later (watermark -> +2 h);
+    # a filler batch, so that a batch runs under that watermark and evicts
+    # the key's state; the re-discovery at +3 h (not late: past +2 h)
+    batches = [
+        [("https://a.example.com/articles/0", base),
+         ("https://A.example.com/articles/0/", base + dt.timedelta(seconds=10)),
+         ("https://a.example.com/articles/1", base + dt.timedelta(seconds=20))],
+        [("https://b.example.com/articles/0", base + dt.timedelta(hours=3))],
+        [("https://b.example.com/articles/1", base + dt.timedelta(hours=3))],
+        [("https://a.example.com/articles/0/", base + dt.timedelta(hours=3))],
+    ]
+    for n, batch in enumerate(batches):
+        rows = [
+            Row(url=u, source_id=0, feed_rank=n * 10 + i, score=0.5, discovered_at=t)
+            for i, (u, t) in enumerate(batch)
+        ]
+        spark.createDataFrame(rows, fs.FRONTIER_STREAM_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(input_dir)
+    stream = fs.dedup_stream(
+        fs.canonicalize_stream(
+            fs.read_frontier_stream(spark, input_dir, max_files_per_trigger=1)
+        )
+    )
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("deduped_stream")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(
+        (r.url, r.discovered_at)
+        for r in spark.sql("select url, discovered_at from deduped_stream").collect()
+    )
+    assert got == sorted([
+        ("https://a.example.com/articles/0", base),
+        ("https://a.example.com/articles/1", base + dt.timedelta(seconds=20)),
+        ("https://b.example.com/articles/0", base + dt.timedelta(hours=3)),
+        ("https://b.example.com/articles/1", base + dt.timedelta(hours=3)),
+        ("https://a.example.com/articles/0/", base + dt.timedelta(hours=3)),
+    ])
+
+
 def test_late_data_dropped_past_watermark(spark, dirs):
     """§2.10 late data: append-mode windowed agg with a 2-minute watermark —
     a row arriving in a later micro-batch with event time far behind the
